@@ -55,11 +55,9 @@ object GraftSession {
       // REJECTED: the dedup probe/funnel family regressed 1.2–1.5×
       // (GC-coupled task-sec inflation in the 128-column signature
       // caches) while the quantile/card family improved ~0.8× — the
-      // scoped helper keeps the win without the loss. The env var is
-      // an A/B measurement lever, not a semantics switch — rows are
-      // identical either way.
+      // scoped helper keeps the win without the loss.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "false"))
+        "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.cbo.enabled", "true")

@@ -643,8 +643,9 @@ object QueriesLlm {
       df.agg(count(lit(1)).as("n_units"),
           sum(tok).cast("long").as("n_tokens"))
         .select(lit(stage).as("stage"), col("n_units"), col("n_tokens"))
-    // the 4-row result is materialized so the quality cache can be
-    // released before returning (the minhashNearDups convention)
+    // the 4-row result is collected so the quality cache can be
+    // released before returning, and handed back as a local frame so
+    // no cached block outlives the call
     val out = funnel(docs, "0_raw")
       .unionByName(funnel(quality, "1_quality"))
       .unionByName(funnel(deduped, "2_dedup"))
@@ -654,10 +655,10 @@ object QueriesLlm {
         .select(lit("3_packed").as("stage"), col("n_units"),
           col("n_tokens")))
       .orderBy("stage")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    quality.unpersist(blocking = false)
-    out
+    val rows =
+      try out.collect()
+      finally quality.unpersist(blocking = false)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** q68 — corpus-trained unigram cross-entropy per document (the

@@ -132,10 +132,6 @@ object GraftFunctions {
     Spec("nfc_normalize", classOf[NfcNormalize].getName,
       "nfc_normalize(s) - Unicode NFC canonical composition", 1,
       { case Seq(s) => NfcNormalize(s) }),
-    Spec("minhash_fold", classOf[MinhashAffineFold].getName,
-      "minhash_fold(h, a, b) - (h*a + b) mod 2147483647 without a " +
-        "division; h in [0, 2^31-1), constant a, b in [0, 2^31)", 3,
-      { case Seq(h, a, b) => MinhashAffineFold(h, a, b) }),
     Spec("minhash_sigs", classOf[MinhashSignaturesAgg].getName,
       "minhash_sigs(h, a_array, b_array) - aggregate: all minhash " +
         "signature components min((h*a_i + b_i) mod 2147483647) in " +

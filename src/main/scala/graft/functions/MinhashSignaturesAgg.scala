@@ -20,10 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * buffer-slot updates per shingle occurrence. This aggregate updates
   * a plain JVM long[] in one tight JIT'd loop per row.
   *
-  * Trade-offs, so the A/B is honest: a TypedImperativeAggregate runs
-  * under ObjectHashAggregateExec, which does NOT join whole-stage
-  * codegen (the upstream projection feeds it row-by-row), and its
-  * in-memory map falls back to sort-based aggregation past
+  * Trade-offs: a TypedImperativeAggregate runs under
+  * ObjectHashAggregateExec, which does NOT join whole-stage codegen
+  * (the upstream projection feeds it row-by-row), and its in-memory
+  * map falls back to sort-based aggregation past
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * distinct keys per partition (Spark default 128 — far below a
   * shingle corpus' per-partition doc count; `GraftSession` raises
@@ -31,10 +31,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * ~1 GB per partition worst case).
   *
   * Value contract: byte-identical to the `n` separate
-  * `min(minhash_fold(h, a_i, b_i))` columns for h in [0, P) and
-  * a, b in [0, 2^31) (LlmSpec pins signature equality end-to-end on
-  * the real funnel). A group whose every h is NULL evaluates to a
-  * NULL array, matching `MIN`'s all-null semantics per component.
+  * `min(pmod(h * a_i + b_i, P))` columns for h in [0, P) and
+  * a, b in [0, 2^31) — the division-free Mersenne fold in `update`
+  * is exact on that domain (PropertySpec pins it against `pmod` on a
+  * boundary-and-random panel). A group whose every h is NULL
+  * evaluates to a NULL array, matching `MIN`'s all-null semantics per
+  * component.
   *
   * Arguments: h (bigint), a (constant array<bigint>), b (constant
   * array<bigint>, same length).

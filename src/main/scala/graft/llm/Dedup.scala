@@ -113,28 +113,6 @@ object Dedup {
       : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
     graft.operators.Lineage.checkpointTracked(df)
 
-  /** Distinct (id, 64-bit shingle hash) rows via explode + dynamic
-    * substring — stays inside whole-stage codegen, unlike
-    * transform()-built arrays. Shingles are hashed BEFORE the distinct
-    * so every downstream shuffle/join carries fixed-width longs, not
-    * strings (collisions would need ~2^32 distinct shingles to matter;
-    * the correctness gate would catch any).
-    */
-  /** Storage level for probeMinhashIndex's intermediate persists,
-    * from `graft.dedup.probePersistLevel` (default MEMORY_AND_DISK).
-    * A measurement lever, not a semantics switch — rows are identical
-    * at any level. The factor-100 decade (SCALING.md round-11) showed
-    * q53/q54 task-sec 16-17× per 10× data against shuffle exactly
-    * 10.1×, the excess GC-coupled at the one-JVM 96 GB bench heap
-    * (gc 4.2 → 128 s); DISK_ONLY / MEMORY_AND_DISK_SER keep the wide
-    * signature caches off (or serialized on) the heap so the
-    * hypothesis is measurable without a rebuild.
-    */
-  private def probePersistLevel(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      spark.conf.get("graft.dedup.probePersistLevel", "MEMORY_AND_DISK"))
-
   /** One (id, 64-bit shingle hash) row per sliding-window OCCURRENCE —
     * deliberately NOT deduped (round-12): minhash MIN aggregates are
     * idempotent under duplicates, so the signature path never needed
@@ -169,23 +147,6 @@ object Dedup {
       .select(col("id"),
         xxhash64(expr(s"substring(txt, i, $shingleK)")).as("s"))
 
-  /** Signatures via numHashes codegen'd MIN aggregates over the hashed
-    * shingles — partial (map-side) aggregation shrinks the shuffle to
-    * |docs|·numHashes longs. Output schema (id, m0..m{n-1}).
-    *
-    * The per-hash reduction `(h·a + b) mod P` is the native
-    * `minhash_fold` expression (division-free Mersenne fold with
-    * codegen LOCALS — a `Column`-composed fold was measured ~2×
-    * SLOWER than `pmod` because codegen re-inlines every subtree
-    * reference; see MinhashAffineFold's scaladoc). The row hash `h`
-    * keeps Spark's `pmod` (one per ROW, and its signed-negative
-    * semantics differ from an unsigned fold). Both signature paths
-    * are byte-identical: PropertySpec pins fold == pmod across the
-    * affine domain, FunctionsSpec pins codegen == interpreted.
-    * `graft.dedup.sigModFold` = false keeps the legacy `pmod`
-    * reduction — a measurement lever for same-window A/Bs, not a
-    * semantics switch.
-    */
   /** ObjectHashAggregate's Spark-default sort fallback engages at 128
     * keys/partition — far below any shingle corpus — so raise it
     * unless the user pinned it; signature buffers are ~8·numHashes
@@ -223,37 +184,28 @@ object Dedup {
         (0 until numHashes).map(i => col("ms")(i).as(s"m$i")): _*)
   }
 
+  /** Signatures via the one-buffer `minhash_sigs` typed aggregate
+    * over the hashed shingles — partial (map-side) aggregation shrinks
+    * the shuffle to |docs|·numHashes longs. Output schema
+    * (id, m0..m{n-1}). Measured −25/−31% task-sec on q31 at 500k docs
+    * and −15/−20% at 50k against the 128-MIN-expression formulation,
+    * both orders, identical shuffle (SCALING.md round-13). The row
+    * hash `h` keeps Spark's `pmod` (one per ROW, and its
+    * signed-negative semantics differ from an unsigned fold).
+    */
   private def signaturesOf(shingleRows: DataFrame, numHashes: Int,
                            seed: Long): DataFrame = {
     val spark = shingleRows.sparkSession
     graft.functions.GraftFunctions.register(spark)
+    raiseObjectAggThreshold(spark)
     val params = hashParams(numHashes, seed)
-    val hashed = shingleRows.withColumn("h", pmod(col("s"), lit(P)))
-    // DEFAULT: the one-buffer typed aggregate — measured −25/−31%
-    // task-sec on q31 at 500k docs and −15/−20% at 50k vs the
-    // 128-MIN-expression formulation, both orders, identical shuffle
-    // (SCALING.md round-13); `graft.dedup.sigAgg=false` restores the
-    // per-column MIN path (which itself honors sigModFold)
-    if (spark.conf.get("graft.dedup.sigAgg", "true").toBoolean) {
-      raiseObjectAggThreshold(spark)
-      hashed.groupBy("id")
-        .agg(call_function("minhash_sigs", col("h"),
-          typedlit(params.map(_._1).toArray),
-          typedlit(params.map(_._2).toArray)).as("ms"))
-        .select(col("id") +:
-          (0 until numHashes).map(i => col("ms")(i).as(s"m$i")): _*)
-    } else {
-      val fold = spark.conf
-        .get("graft.dedup.sigModFold", "true").toBoolean
-      def reduce(a: Long, b: Long): Column =
-        if (fold)
-          call_function("minhash_fold", col("h"), lit(a), lit(b))
-        else pmod(col("h") * lit(a) + lit(b), lit(P))
-      val mins = params.zipWithIndex.map { case ((a, b), i) =>
-        min(reduce(a, b)).as(s"m$i")
-      }
-      hashed.groupBy("id").agg(mins.head, mins.tail: _*)
-    }
+    shingleRows.withColumn("h", pmod(col("s"), lit(P)))
+      .groupBy("id")
+      .agg(call_function("minhash_sigs", col("h"),
+        typedlit(params.map(_._1).toArray),
+        typedlit(params.map(_._2).toArray)).as("ms"))
+      .select(col("id") +:
+        (0 until numHashes).map(i => col("ms")(i).as(s"m$i")): _*)
   }
 
   /** (id, band, bh) LSH band projection of a signature table. With
@@ -358,9 +310,13 @@ object Dedup {
     * @return (idA, idB, jaccard) with idA < idB. The returned pairs
     *   are already materialized (persisted; the funnel's intermediates
     *   are released before returning) — `.unpersist()` the result when
-    *   done. The funnel's internals are lineage-cut checkpoints, so
-    *   the result CANNOT be recomputed once released: materialize
-    *   anything derived from it before unpersisting
+    *   done. From `graft.dedup.estimateSemiJoinMinCorpus` docs up
+    *   (default 20000; `<= 0` always) the result depends on a lineage
+    *   cut: its lineage runs through a `localCheckpoint` of the
+    *   candidate pairs, released before this returns, so only the
+    *   result's own cached blocks keep it alive and it CANNOT be
+    *   recomputed once unpersisted or evicted. The caller must
+    *   materialize anything derived from it before unpersisting
     *
     * Candidate funnel, widest to narrowest: band-bucket self-join
     * (with a MAP-SIDE 32-byte signature-sketch cut inside the join
@@ -372,12 +328,13 @@ object Dedup {
     * the expensive set intersection only ever sees a thin,
     * near-certain tail.
     *
-    * Every bulk step is whole-stage-codegen'd: shingles come from
-    * explode+substring (not interpreted array HOFs), signatures from
-    * `numHashes` MIN aggregates, candidate counting from a band-bucket
-    * self-join + count aggregate, and the estimate from equi-joins
-    * against the persisted signature table (AQE broadcasts them when
-    * small).
+    * Every bulk step but the signatures is whole-stage-codegen'd:
+    * shingles come from explode+substring (not interpreted array
+    * HOFs), candidate counting from a band-bucket self-join + count
+    * aggregate, and the estimate from equi-joins against the persisted
+    * signature table (AQE broadcasts them when small). Signatures come
+    * from the one-buffer `minhash_sigs` typed aggregate (a JIT'd
+    * primitive loop per row; see `signaturesOf`).
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       shingleK: Int = 4, numHashes: Int = 128,
@@ -830,12 +787,14 @@ object Dedup {
     * verify — corpus text is never touched wholesale. Ids must be
     * unique across corpus and batch.
     *
-    * The returned pairs are already materialized (persisted; the
-    * probe's intermediates are released before returning) —
-    * `.unpersist()` the result when done. The probe's internals are
-    * lineage-cut checkpoints, so the result CANNOT be recomputed once
-    * released: materialize anything derived from it before
-    * unpersisting.
+    * @return (id_a, id_b, jaccard) pairs, already materialized
+    *   (persisted; the probe's intermediates are released before
+    *   returning) — `.unpersist()` the result when done. The result
+    *   depends on a lineage cut: its lineage runs through the probe's
+    *   `localCheckpoint` candidate blocks, which are released before
+    *   this returns, so it CANNOT be recomputed once unpersisted or
+    *   evicted: the caller must materialize anything derived from it
+    *   before unpersisting.
     */
   def probeMinhashIndex(indexPath: String, corpus: DataFrame,
                         newDf: DataFrame, idCol: String, textCol: String,
@@ -874,13 +833,13 @@ object Dedup {
     // contract bounds it); the corpus side below dedups POST-prune
     val newShingles = shingleHashRows(newDf, idCol, textCol, shingleK)
       .distinct()
-      .persist(probePersistLevel(spark))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // persisted COLUMNAR (the minhashNearDups sig rationale): the
     // 128-column signature frame is scan-hot (banding + the estimate
     // join), so it keeps the fast columnar cache; the probe's
     // explain-nesting cut lives in the narrow `candidates` below
     val newSig = signaturesOf(newShingles, numHashes, seed)
-      .persist(probePersistLevel(spark))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Every static broadcast in the probe is DATA-DEPENDENT — the
     // batch by the ingest contract, candidates by band matches — and
@@ -924,13 +883,10 @@ object Dedup {
     // index side is scan → broadcast-join → filter → project and the
     // batch side is small by contract — so there is no corpus-size
     // knee: the cut is on whenever the threshold is 6σ-separable on
-    // 32 bytes (`graft.dedup.probePairSketch` = false opts out;
-    // below-cut survivors are unchanged — the full estimate and the
-    // exact verify still run).
-    val probeSketch = spark.conf
-      .get("graft.dedup.probePairSketch", "true").toBoolean
+    // 32 bytes (below-cut survivors are unchanged — the full estimate
+    // and the exact verify still run).
     val (pSkLongs0, pCutBytes) = sketchCutGeometry(numHashes, threshold)
-    val pSkLongs = if (probeSketch && pCutBytes >= 1) pSkLongs0 else 0
+    val pSkLongs = if (pCutBytes >= 1) pSkLongs0 else 0
     def pSkCut: Column =
       (0 until pSkLongs).map(j =>
         byteMatches(col(s"x.sk$j"), col(s"y.sk$j"))).reduce(_ + _) >=
@@ -990,7 +946,7 @@ object Dedup {
       // than an error; distinct on this O(candidates) frame is cheap
       // insurance that the verify stays exact
       .distinct()
-      .persist(probePersistLevel(spark))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // exact verify: corpus text re-shingled ONLY for candidate docs.
     // candA broadcast statically — a shuffled semi join would write
@@ -1005,7 +961,7 @@ object Dedup {
     val corpusShingles = shingleHashRows(corpus, idCol, textCol, shingleK)
       .join(bcastIfSafe(candA), Seq("id"), "left_semi")
       .distinct()
-      .persist(probePersistLevel(spark))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizesA = corpusShingles.groupBy("id").agg(count(lit(1)).as("na"))
     val sizesB = newShingles.groupBy("id").agg(count(lit(1)).as("nb"))
     val inter = strong
@@ -1021,7 +977,7 @@ object Dedup {
           .cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-      .persist(probePersistLevel(spark))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // materialize the (tiny) pair result, then release the probe's
     // intermediates — a per-micro-batch caller (dedupIngestStream)
     // would otherwise accumulate four cached frames per batch forever

@@ -1273,8 +1273,9 @@ object Similarity {
     * capped at 20. Until the quadratic term actually threatens,
     * small and mid corpora keep the legacy (32, 8) geometry
     * byte-for-byte; at the measured n=200k escape point the gate
-    * engages (r=13-14 — CosineEscapeCheck measured r=14 at 15.6×
-    * fewer comparisons, 2.9× faster wall, identical pairs).
+    * engages (r=13-14 — SCALING.md round-11 factor-100 section
+    * measured r=14 at 15.6× fewer comparisons, 2.9× faster wall,
+    * identical pairs).
     *
     * bands b(r) = the smallest count whose per-pair miss probability
     * AT the threshold, (1−s^r)^b with s = 1−acos(t)/π, does not
@@ -1355,12 +1356,12 @@ object Similarity {
     * regresses the old fixed default at any threshold, and corpora
     * below the budget knee (N ≲ 50k at t=0.9) keep exactly (8, 32)
     * (byte-identical rows AND plan to the legacy default).
-    * Round-11's CosineEscapeCheck measured the N=200k escape at
-    * 15.6× fewer enumerated comparisons, 2.9× faster wall, identical
-    * pair set. Explicit positive `bands`/`planesPerBand` bypass the
-    * derivation. The
-    * enumeration term stays MONITORED either way: a CollectMetrics
-    * node counts the comparisons actually enumerated, and past
+    * SCALING.md's round-11 factor-100 section measured the N=200k
+    * escape at 15.6× fewer enumerated comparisons, 2.9× faster wall,
+    * identical pair set. Explicit positive `bands`/`planesPerBand`
+    * bypass the derivation. The enumeration term stays MONITORED
+    * either way: a CollectMetrics node counts the comparisons
+    * actually enumerated, and past
     * `graft.similarity.warnEnumeratedPairs` (default 1e8, <=0 off)
     * the operator WARNs with the raise-r guidance and records the
     * event in [[GuardEvents]] — rows are never changed by the

@@ -1075,14 +1075,15 @@ object TextAnalysis {
     * own rows (guide §2.3/§2.4 — the cheapest shuffle is the deleted
     * one). The kernel walks each doc's CODE POINTS (Spark's
     * `substring`/`length` semantics, so astral characters gram
-    * exactly like the relational path) with one reused HashSet;
+    * exactly like the relational formulation) with one reused HashSet;
     * per-doc state is O(doc grams), the same bound the old
     * per-group aggregate buffer had. `lz_cost`/`lz_ratio` stay
     * COLUMN expressions so the rounding is bit-identical to the
-    * relational path (and the DuckDB oracle).
-    * `graft.text.lzMapKernel=false` restores the explode+distinct
-    * formulation (same rows — LlmSpec pins kernel == relational,
-    * astral chars included).
+    * relational formulation (and the DuckDB oracle). The relational
+    * formulation lost on q137 (isolated wall 7.24 s vs the kernel's
+    * 0.62 s, SCALING.md round-13) and is gone from the engine; LlmSpec
+    * keeps it as the reference the kernel must match row-for-row,
+    * astral chars included.
     *
     * @return (id, n_chars, n_grams, n_novel, lz_cost, lz_ratio) for
     *         docs with at least k chars — shorter docs have no k-gram
@@ -1093,50 +1094,36 @@ object TextAnalysis {
     if (k < 2)
       throw InvalidArgumentValue(s"k must be >= 2: $k")
     val spark = df.sparkSession
-    val counts =
-      if (spark.conf.get("graft.text.lzMapKernel", "true").toBoolean) {
-        import spark.implicits._
-        df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-          .as[(Long, String)]
-          .mapPartitions { rows =>
-            // reused across rows; cleared per doc. Strings are built
-            // from the code-point array so gram boundaries match
-            // Spark's substring (code points, not UTF-16 units).
-            val seen = new java.util.HashSet[String](1 << 12)
-            rows.flatMap { case (id, t) =>
-              if (t == null) None
-              else {
-                val cps = t.codePoints().toArray
-                val n = cps.length
-                if (n < k) None
-                else {
-                  seen.clear()
-                  var novel = 0L
-                  var i = 0
-                  val last = n - k
-                  while (i <= last) {
-                    if (seen.add(new String(cps, i, k))) novel += 1
-                    i += 1
-                  }
-                  Some((id, n.toLong, (n - k + 1).toLong, novel)
-                  )
-                }
+    import spark.implicits._
+    val counts = df
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
+      .as[(Long, String)]
+      .mapPartitions { rows =>
+        // reused across rows; cleared per doc. Strings are built from
+        // the code-point array so gram boundaries match Spark's
+        // substring (code points, not UTF-16 units).
+        val seen = new java.util.HashSet[String](1 << 12)
+        rows.flatMap { case (id, t) =>
+          if (t == null) None
+          else {
+            val cps = t.codePoints().toArray
+            val n = cps.length
+            if (n < k) None
+            else {
+              seen.clear()
+              var novel = 0L
+              var i = 0
+              val last = n - k
+              while (i <= last) {
+                if (seen.add(new String(cps, i, k))) novel += 1
+                i += 1
               }
+              Some((id, n.toLong, (n - k + 1).toLong, novel))
             }
           }
-          .toDF("id", "n_chars", "n_grams", "n_novel")
-      } else {
-        val grams = df
-          .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-          .filter(length(col("t")) >= k)
-          .select(col("id"), length(col("t")).cast("long").as("n_chars"),
-            explode(expr(
-              s"transform(sequence(1, length(t) - ${k - 1}), " +
-                s"i -> substring(t, i, $k))")).as("g"))
-        grams.groupBy("id", "n_chars")
-          .agg(count(lit(1)).as("n_grams"),
-            countDistinct(col("g")).as("n_novel"))
+        }
       }
+      .toDF("id", "n_chars", "n_grams", "n_novel")
     counts
       .select(col("id"), col("n_chars"), col("n_grams"), col("n_novel"),
         (col("n_novel") * k + (col("n_grams") - col("n_novel")) * 3)

@@ -47,6 +47,14 @@ object AdaptiveCache {
     *   while still deleting the hundreds of empty micro-tasks. At
     *   production scale exchanges are ≫ the floor either way — the
     *   override only matters in the tiny-bytes regime it is for.
+    *
+    * Assumes ONE operator at a time per SparkSession: the scope sets
+    * and restores session-wide SQL conf, so another thread persisting
+    * frames on the same session inside the window inherits the scoped
+    * values, and two overlapping scopes can restore out of order and
+    * leave the wrong value behind. Nested scopes on one thread compose
+    * correctly. Run concurrent operators on separate sessions
+    * (`spark.newSession()`).
     */
   def withCoalescedCaches[T](spark: SparkSession,
                              minPartitionSize: Option[String] = None)

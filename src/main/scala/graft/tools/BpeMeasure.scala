@@ -56,38 +56,39 @@ object BpeMeasure {
     val numMerges = if (args.length > 1) args(1).toInt else 500
     val spark = GraftSession.builder("graft-bpe-measure", "local[32]")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    val counter = new JobCounter
-    spark.sparkContext.addSparkListener(counter)
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      val counter = new JobCounter
+      spark.sparkContext.addSparkListener(counter)
 
-    val corpus =
-      if (src == "rich") richCorpus(spark)
-      else spark.read.parquet(src).select("doc_id", "text")
-    corpus.cache().count()
+      val corpus =
+        if (src == "rich") richCorpus(spark)
+        else spark.read.parquet(src).select("doc_id", "text")
+      corpus.cache().count()
 
-    def measure(label: String, maxBatch: Int,
-                maxDriverWords: Long): Seq[(String, String)] = {
-      // one untimed warmup round on a tiny slice (JIT + codegen)
-      Bpe.trainBpeMerges(corpus.limit(2), "text", 2, maxBatch,
-        maxDriverWords)
-      Thread.sleep(500)
-      val j0 = counter.n.get()
-      val t0 = System.nanoTime()
-      val ms = Bpe.trainBpeMerges(corpus, "text", numMerges, maxBatch,
-        maxDriverWords)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val jobs = counter.n.get() - j0
-      println(f"$label%-16s merges=${ms.size}%5d rounds=${Bpe.lastTrainRounds}%5d jobs=$jobs%6d wall=$wall%8.1f s")
-      ms
-    }
+      def measure(label: String, maxBatch: Int,
+                  maxDriverWords: Long): Seq[(String, String)] = {
+        // one untimed warmup round on a tiny slice (JIT + codegen)
+        Bpe.trainBpeMerges(corpus.limit(2), "text", 2, maxBatch,
+          maxDriverWords)
+        Thread.sleep(500)
+        val j0 = counter.n.get()
+        val t0 = System.nanoTime()
+        val ms = Bpe.trainBpeMerges(corpus, "text", numMerges, maxBatch,
+          maxDriverWords)
+        val wall = (System.nanoTime() - t0) / 1e9
+        val jobs = counter.n.get() - j0
+        println(f"$label%-16s merges=${ms.size}%5d rounds=${Bpe.lastTrainRounds}%5d jobs=$jobs%6d wall=$wall%8.1f s")
+        ms
+      }
 
-    val tier1 = measure("tier1-in-memory", 256, 2000000L)
-    val batched = measure("tier2-batched", 256, 0L)
-    val seq = measure("tier2-sequential", 1, 0L)
-    require(tier1 == batched && batched == seq,
-      "execution paths disagree — a tier is unsound")
-    println("merge lists identical across all three paths: true")
-    spark.stop()
+      val tier1 = measure("tier1-in-memory", 256, 2000000L)
+      val batched = measure("tier2-batched", 256, 0L)
+      val seq = measure("tier2-sequential", 1, 0L)
+      require(tier1 == batched && batched == seq,
+        "execution paths disagree — a tier is unsound")
+      println("merge lists identical across all three paths: true")
+    } finally spark.stop()
   }
 }

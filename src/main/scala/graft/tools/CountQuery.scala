@@ -17,18 +17,19 @@ object CountQuery {
     val names = args(1).split(",").toSeq
     val spark = GraftSession.builder("graft-count", "local[32]")
       .config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    names.foreach { raw =>
-      val show = raw.startsWith("show:")
-      val name = if (show) raw.stripPrefix("show:") else raw
-      val fn = ScaleMeasure.Extras.getOrElse(name,
-        SparkEntry.queries(name))
-      val df = fn(spark, sfDir)
-      if (show) df.show(100, false)
-      else println(s"[count] $name | $sfDir | rows=${df.count()}")
-      spark.catalog.clearCache()
-    }
-    spark.stop()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      names.foreach { raw =>
+        val show = raw.startsWith("show:")
+        val name = if (show) raw.stripPrefix("show:") else raw
+        val fn = ScaleMeasure.Extras.getOrElse(name,
+          SparkEntry.queries(name))
+        val df = fn(spark, sfDir)
+        if (show) df.show(100, false)
+        else println(s"[count] $name | $sfDir | rows=${df.count()}")
+        spark.catalog.clearCache()
+      }
+    } finally spark.stop()
   }
 }

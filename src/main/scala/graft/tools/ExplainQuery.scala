@@ -17,13 +17,14 @@ object ExplainQuery {
     val exec = args.lift(2).contains("exec")
     val spark = GraftSession.builder("graft-explain", "local[32]")
       .config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    if (exec) df.write.format("noop").mode("overwrite").save()
-    println("=== plan ===")
-    println(df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    spark.stop()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      if (exec) df.write.format("noop").mode("overwrite").save()
+      println("=== plan ===")
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    } finally spark.stop()
   }
 }

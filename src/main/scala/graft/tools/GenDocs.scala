@@ -137,8 +137,9 @@ object GenDocs {
     val open = args.lift(2).contains("open")
     val spark = GraftSession.builder("graft-gendocs", "local[32]")
       .config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    generate(spark, outDir, n, open)
-    spark.stop()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      generate(spark, outDir, n, open)
+    } finally spark.stop()
   }
 }

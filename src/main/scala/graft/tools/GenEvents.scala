@@ -52,8 +52,9 @@ object GenEvents {
     val n = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val spark = GraftSession.builder("graft-genevents", "local[32]")
       .config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    generate(spark, outDir, n)
-    spark.stop()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      generate(spark, outDir, n)
+    } finally spark.stop()
   }
 }

@@ -142,8 +142,9 @@ object GenSf {
       .getOrElse(Set.empty[String])
     val spark = GraftSession.builder("graft-gensf", "local[32]")
       .config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    generate(spark, srcDir, outDir, factor, only)
-    spark.stop()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      generate(spark, srcDir, outDir, factor, only)
+    } finally spark.stop()
   }
 }

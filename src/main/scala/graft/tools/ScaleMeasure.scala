@@ -109,30 +109,6 @@ object ScaleMeasure {
         mass(50).as("pair_mass_cap50"),
         mass(20).as("pair_mass_cap20"))
     }),
-    // the probe-path sketch cut's opt-out (the r12 probe plan), for
-    // the A/B against the default-on q53_dedup_incremental arm — the
-    // conf is read at plan-build time inside the probe, so wrapping
-    // the call is enough
-    "q53_nosketch" -> ((s, dir) => {
-      s.conf.set("graft.dedup.probePairSketch", "false")
-      try SparkEntry.queries("q53_dedup_incremental")(s, dir)
-      finally s.conf.unset("graft.dedup.probePairSketch")
-    }),
-    // the signature reduction's legacy-division arm (byte-identical
-    // rows either way — the A/B compares pure CPU)
-    "q31_sigpmod" -> ((s, dir) => {
-      s.conf.set("graft.dedup.sigModFold", "false")
-      try SparkEntry.queries("q31_dedup_minhash")(s, dir)
-      finally s.conf.unset("graft.dedup.sigModFold")
-    }),
-    // the per-column MIN-expression signature arm (the pre-round-13
-    // default; byte-identical rows — the A/B compares agg machinery:
-    // 128 codegen'd MIN expressions vs one primitive long[] loop)
-    "q31_sigmins" -> ((s, dir) => {
-      s.conf.set("graft.dedup.sigAgg", "false")
-      try SparkEntry.queries("q31_dedup_minhash")(s, dir)
-      finally s.conf.unset("graft.dedup.sigAgg")
-    }),
     // q31 on the one-permutation family (q142's path at q31's corpus
     // scale — different signatures, same verified pair set where
     // recall is 1; the A/B against q31_dedup_minhash compares ONE
@@ -196,7 +172,7 @@ object ScaleMeasure {
     // cosine LSH geometry A/B at one corpus, same harness, same rep
     // protocol: the q35 corpus shape under the legacy fixed (32, 8)
     // vs the corpus-scaled auto default (bands=0 ⇒ autoLshParams).
-    // The round-11 CosineEscapeCheck measured the escape 2.9× faster
+    // SCALING.md round-11 (factor 100) measured the escape 2.9× faster
     // on a PRE-CACHED corpus; the registered-query measurements
     // disagreed, so the default is decided by THIS harness's numbers.
     "q35_legacy" -> ((s, dir) => cosineGeom(s, dir, 32, 8)),
@@ -268,62 +244,63 @@ object ScaleMeasure {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder("graft-scale", s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    // ad-hoc conf overrides for lever experiments, e.g.
-    // GRAFT_CONF="graft.dedup.maxBroadcastCandidates=1"
-    sys.env.get("GRAFT_CONF").foreach(
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
-    val sc = spark.sparkContext
-    val listener = new Listener
-    sc.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      // ad-hoc conf overrides for lever experiments, e.g.
+      // GRAFT_CONF="graft.dedup.maxBroadcastCandidates=1"
+      sys.env.get("GRAFT_CONF").foreach(
+        _.split(";").filter(_.contains("=")).foreach { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          spark.conf.set(k, v)
+        })
+      val sc = spark.sparkContext
+      val listener = new Listener
+      sc.addSparkListener(listener)
 
-    val timings = scala.collection.mutable.Map[String, List[Double]]()
-      .withDefaultValue(Nil)
-    // one untimed warmup pass, then interleaved timed reps
-    for (rep <- 0 to reps; name <- names) {
-      val fn = Extras.getOrElse(name, SparkEntry.queries(name))
-      if (rep > 0) sc.setJobGroup(name, s"scale $name")
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (rep > 0) timings(name) ::= dt
-        // live progress for multi-hour sweeps (stderr, not the table)
-        System.err.println(f"[scale] rep=$rep $name ${dt}%.1f s")
-      } catch {
-        // a failing query must not abort the whole sweep — record it
-        // (-1 median, like Bench) and keep measuring the rest
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] $name failed: ${e.getMessage}")
-          timings(name) = List(-1.0)
-      } finally {
-        spark.catalog.clearCache()
-        // a long multi-query sweep in ONE JVM accumulates GC-reclaimed
-        // localCheckpoint blocks (quantiles/dedup internals) and heap
-        // churn; without a kick between queries the tail of the sweep
-        // measures the head's garbage (q71 measured 6.7 s solo vs
-        // 77 s late in a 35-query sweep — GC stalls, not the query)
-        System.gc()
-        if (rep > 0) sc.clearJobGroup()
+      val timings = scala.collection.mutable.Map[String, List[Double]]()
+        .withDefaultValue(Nil)
+      // one untimed warmup pass, then interleaved timed reps
+      for (rep <- 0 to reps; name <- names) {
+        val fn = Extras.getOrElse(name, SparkEntry.queries(name))
+        if (rep > 0) sc.setJobGroup(name, s"scale $name")
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          if (rep > 0) timings(name) ::= dt
+          // live progress for multi-hour sweeps (stderr, not the table)
+          System.err.println(f"[scale] rep=$rep $name ${dt}%.1f s")
+        } catch {
+          // a failing query must not abort the whole sweep — record it
+          // (-1 median, like Bench) and keep measuring the rest
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[scale] $name failed: ${e.getMessage}")
+            timings(name) = List(-1.0)
+        } finally {
+          spark.catalog.clearCache()
+          // a long multi-query sweep in ONE JVM accumulates GC-reclaimed
+          // localCheckpoint blocks (quantiles/dedup internals) and heap
+          // churn; without a kick between queries the tail of the sweep
+          // measures the head's garbage (q71 measured 6.7 s solo vs
+          // 77 s late in a 35-query sweep — GC stalls, not the query)
+          System.gc()
+          if (rep > 0) sc.clearJobGroup()
+        }
       }
-    }
-    Thread.sleep(2000)
-    def median(xs: List[Double]): Double = xs.sorted.apply(xs.size / 2)
-    println(f"## $sfDir reps=$reps")
-    println("query | wall_median_s | shuffle_mb_per_rep | task_sec_per_rep | tasks_per_rep | gc_sec_per_rep")
-    names.foreach { name =>
-      val ts = timings(name)
-      val a = listener.agg.getOrElse(name, Array.fill(5)(0L))
-      val n = math.max(ts.size, 1)
-      val m = if (ts.contains(-1.0)) -1.0 else median(ts)
-      println(f"$name | $m%.2f | " +
-        f"${(a(0) + a(1)) / n / 1e6}%.2f | ${a(2) / n / 1e3}%.1f | ${a(3) / n} | " +
-        f"${a(4) / n / 1e3}%.1f")
-    }
-    spark.stop()
+      Thread.sleep(2000)
+      def median(xs: List[Double]): Double = xs.sorted.apply(xs.size / 2)
+      println(f"## $sfDir reps=$reps")
+      println("query | wall_median_s | shuffle_mb_per_rep | task_sec_per_rep | tasks_per_rep | gc_sec_per_rep")
+      names.foreach { name =>
+        val ts = timings(name)
+        val a = listener.agg.getOrElse(name, Array.fill(5)(0L))
+        val n = math.max(ts.size, 1)
+        val m = if (ts.contains(-1.0)) -1.0 else median(ts)
+        println(f"$name | $m%.2f | " +
+          f"${(a(0) + a(1)) / n / 1e6}%.2f | ${a(2) / n / 1e3}%.1f | ${a(3) / n} | " +
+          f"${a(4) / n / 1e3}%.1f")
+      }
+    } finally spark.stop()
   }
 }

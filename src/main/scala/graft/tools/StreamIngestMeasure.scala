@@ -86,134 +86,135 @@ object StreamIngestMeasure {
     val spark = GraftSession.builder("graft-ingest-measure", "local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    val listener = new Totals
-    spark.sparkContext.addSparkListener(listener)
-    val baseFile = new java.io.File(s"target/im-$label")
-    // clean slate: a leftover checkpoint would mark the batch already
-    // processed (skewing landed counts) and a leftover index would be
-    // appended to
-    def rmRf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRf)
-      f.delete(): Unit
-    }
-    if (baseFile.exists()) rmRf(baseFile)
-    val base = baseFile.getAbsolutePath
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      val listener = new Totals
+      spark.sparkContext.addSparkListener(listener)
+      val baseFile = new java.io.File(s"target/im-$label")
+      // clean slate: a leftover checkpoint would mark the batch already
+      // processed (skewing landed counts) and a leftover index would be
+      // appended to
+      def rmRf(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rmRf)
+        f.delete(): Unit
+      }
+      if (baseFile.exists()) rmRf(baseFile)
+      val base = baseFile.getAbsolutePath
 
-    val corpus = spark.read.parquet(docsPath).select("doc_id", "text")
-    val nCorpus = corpus.count()
+      val corpus = spark.read.parquet(docsPath).select("doc_id", "text")
+      val nCorpus = corpus.count()
 
-    // the fixed probe batch: 500 docs, half copied from the corpus
-    // (guaranteed dups), half with a disambiguating suffix — SAME
-    // batch shape at every corpus scale
-    val batch = corpus.orderBy("doc_id").limit(500)
-      .select((F.col("doc_id") + 10000000L).as("doc_id"),
-        F.when(F.col("doc_id") % 2 === 0, F.col("text"))
-          .otherwise(F.concat(F.col("text"),
-            F.lit(" zzqx unique suffix marker"))).as("text"))
-    batch.cache().count()
+      // the fixed probe batch: 500 docs, half copied from the corpus
+      // (guaranteed dups), half with a disambiguating suffix — SAME
+      // batch shape at every corpus scale
+      val batch = corpus.orderBy("doc_id").limit(500)
+        .select((F.col("doc_id") + 10000000L).as("doc_id"),
+          F.when(F.col("doc_id") % 2 === 0, F.col("text"))
+            .otherwise(F.concat(F.col("text"),
+              F.lit(" zzqx unique suffix marker"))).as("text"))
+      batch.cache().count()
 
-    val idx = s"$base/idx"
-    val t0 = System.nanoTime()
-    Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
-    val buildWall = (System.nanoTime() - t0) / 1e9
-    println(f"[im] index_build | corpus=$nCorpus | wall=$buildWall%.2f s")
+      val idx = s"$base/idx"
+      val t0 = System.nanoTime()
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
+      val buildWall = (System.nanoTime() - t0) / 1e9
+      println(f"[im] index_build | corpus=$nCorpus | wall=$buildWall%.2f s")
 
-    // prepared novelty gate: the reference gram set is built ONCE
-    // (its linear-in-corpus cost lands here, with the index build)
-    // and probed per batch — `noveltynaive` keeps the per-batch
-    // recompute for the decade comparison
-    val gramSet =
-      if (noveltyGate && !noveltyNaive) {
-        val tg = System.nanoTime()
-        val gs = Dedup.buildGramSet(corpus, "doc_id", "text", n = 5)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nG = gs.count()
-        println(f"[im] gramset_build | corpus=$nCorpus | " +
-          f"wall=${(System.nanoTime() - tg) / 1e9}%.2f s | grams=$nG")
-        Some(gs)
-      } else None
+      // prepared novelty gate: the reference gram set is built ONCE
+      // (its linear-in-corpus cost lands here, with the index build)
+      // and probed per batch — `noveltynaive` keeps the per-batch
+      // recompute for the decade comparison
+      val gramSet =
+        if (noveltyGate && !noveltyNaive) {
+          val tg = System.nanoTime()
+          val gs = Dedup.buildGramSet(corpus, "doc_id", "text", n = 5)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val nG = gs.count()
+          println(f"[im] gramset_build | corpus=$nCorpus | " +
+            f"wall=${(System.nanoTime() - tg) / 1e9}%.2f s | grams=$nG")
+          Some(gs)
+        } else None
 
-    val srcDir = s"$base/in"
-    batch.write.mode("overwrite").parquet(srcDir)
+      val srcDir = s"$base/in"
+      batch.write.mode("overwrite").parquet(srcDir)
 
-    // one untimed warmup pass (codegen), then the timed pass
-    for (rep <- 0 to 1) {
-      val out = s"$base/clean-$rep"
-      val ckpt = s"$base/ckpt-$rep"
-      if (rep == 1) { listener.reset(); listener.on.set(true) }
-      val t1 = System.nanoTime()
-      val gate: Option[org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame] =
-        if (qualityOnly) Some(df => qualityStage(df))
-        else if (!noveltyGate) None
-        else gramSet match {
-          case Some(gs) if gauntlet =>
-            // the production composition: cheap deterministic quality
-            // rules first (rejects never reach the gram probe), then
-            // the prepared novelty gate
-            Some(df => Streaming.noveltyGate(gs, "doc_id", "text",
-              n = 5)(qualityStage(df)))
-          case Some(gs) =>
-            Some(Streaming.noveltyGate(gs, "doc_id", "text", n = 5))
-          case None => Some { df =>
-            val nov = Dedup.gramNoveltyScore(df, corpus, "doc_id",
-              "text", "doc_id", "text", n = 5)
-            df.join(nov.filter(F.col("novelty") >= 0.3)
-              .select(F.col("id").as("doc_id")), Seq("doc_id"))
+      // one untimed warmup pass (codegen), then the timed pass
+      for (rep <- 0 to 1) {
+        val out = s"$base/clean-$rep"
+        val ckpt = s"$base/ckpt-$rep"
+        if (rep == 1) { listener.reset(); listener.on.set(true) }
+        val t1 = System.nanoTime()
+        val gate: Option[org.apache.spark.sql.DataFrame =>
+            org.apache.spark.sql.DataFrame] =
+          if (qualityOnly) Some(df => qualityStage(df))
+          else if (!noveltyGate) None
+          else gramSet match {
+            case Some(gs) if gauntlet =>
+              // the production composition: cheap deterministic quality
+              // rules first (rejects never reach the gram probe), then
+              // the prepared novelty gate
+              Some(df => Streaming.noveltyGate(gs, "doc_id", "text",
+                n = 5)(qualityStage(df)))
+            case Some(gs) =>
+              Some(Streaming.noveltyGate(gs, "doc_id", "text", n = 5))
+            case None => Some { df =>
+              val nov = Dedup.gramNoveltyScore(df, corpus, "doc_id",
+                "text", "doc_id", "text", n = 5)
+              df.join(nov.filter(F.col("novelty") >= 0.3)
+                .select(F.col("id").as("doc_id")), Seq("doc_id"))
+            }
+          }
+        val q = Streaming.dedupIngestStream(
+          Streaming.readParquetStream(spark, srcDir, batch,
+            maxFilesPerTrigger = 100),
+          "doc_id", "text", idx, corpus, out, ckpt, minBandMatches = 3,
+          qualityGate = gate)
+        try q.processAllAvailable() finally q.stop()
+        val wall = (System.nanoTime() - t1) / 1e9
+        if (rep == 1) {
+          listener.on.set(false)
+          Thread.sleep(1500)
+          val landed = spark.read.parquet(out).count()
+          val tag =
+            if (gauntlet) "probe_batch_gauntlet"
+            else if (qualityOnly) "probe_batch_qonly"
+            else if (noveltyNaive) "probe_batch_noveltynaive"
+            else if (noveltyGate) "probe_batch_novelty"
+            else "probe_batch"
+          println(f"[im] $tag | corpus=$nCorpus | wall=$wall%.2f s | " +
+            f"task=${listener.taskMs.get() / 1e3}%.1f s | " +
+            f"shuffle_mb=${listener.shuffle.get() / 1e6}%.2f | " +
+            f"tasks=${listener.tasks.get()} | landed=$landed")
+          if (sys.env.get("GRAFT_IM_STAGES").contains("1")) {
+            import scala.jdk.CollectionConverters._
+            listener.byStage.asScala.toSeq.sortBy(-_._2(0)).take(12)
+              .foreach { case (n, a) =>
+                println(f"[im-stage] ${a(0) / 1e3}%8.1f s | ${a(1)}%5d | $n")
+              }
+          }
+          if (gauntlet) {
+            // batch-mode replay of the same composed pipeline: the
+            // landed set must be EXACTLY the batch-mode survivors
+            // (the stream is just the batch pipeline per micro-batch)
+            val gated = Streaming.noveltyGate(gramSet.get, "doc_id",
+              "text", n = 5)(qualityStage(batch))
+            val dups = Dedup.probeMinhashIndex(idx, corpus, gated,
+              "doc_id", "text", minBandMatches = 3)
+            val dupIds = dups.select("id_b")
+              .collect().map(_.getLong(0)).toSet
+            dups.unpersist(blocking = false)
+            val batchSurvivors = gated.select("doc_id")
+              .collect().map(_.getLong(0)).toSet -- dupIds
+            val landedIds = spark.read.parquet(out).select("doc_id")
+              .collect().map(_.getLong(0)).toSet
+            println(s"[im] gauntlet_equivalence | landed==batch-mode: " +
+              s"${landedIds == batchSurvivors} | landed=${landedIds.size} " +
+              s"batch=${batchSurvivors.size}")
           }
         }
-      val q = Streaming.dedupIngestStream(
-        Streaming.readParquetStream(spark, srcDir, batch,
-          maxFilesPerTrigger = 100),
-        "doc_id", "text", idx, corpus, out, ckpt, minBandMatches = 3,
-        qualityGate = gate)
-      try q.processAllAvailable() finally q.stop()
-      val wall = (System.nanoTime() - t1) / 1e9
-      if (rep == 1) {
-        listener.on.set(false)
-        Thread.sleep(1500)
-        val landed = spark.read.parquet(out).count()
-        val tag =
-          if (gauntlet) "probe_batch_gauntlet"
-          else if (qualityOnly) "probe_batch_qonly"
-          else if (noveltyNaive) "probe_batch_noveltynaive"
-          else if (noveltyGate) "probe_batch_novelty"
-          else "probe_batch"
-        println(f"[im] $tag | corpus=$nCorpus | wall=$wall%.2f s | " +
-          f"task=${listener.taskMs.get() / 1e3}%.1f s | " +
-          f"shuffle_mb=${listener.shuffle.get() / 1e6}%.2f | " +
-          f"tasks=${listener.tasks.get()} | landed=$landed")
-        if (sys.env.get("GRAFT_IM_STAGES").contains("1")) {
-          import scala.jdk.CollectionConverters._
-          listener.byStage.asScala.toSeq.sortBy(-_._2(0)).take(12)
-            .foreach { case (n, a) =>
-              println(f"[im-stage] ${a(0) / 1e3}%8.1f s | ${a(1)}%5d | $n")
-            }
-        }
-        if (gauntlet) {
-          // batch-mode replay of the same composed pipeline: the
-          // landed set must be EXACTLY the batch-mode survivors
-          // (the stream is just the batch pipeline per micro-batch)
-          val gated = Streaming.noveltyGate(gramSet.get, "doc_id",
-            "text", n = 5)(qualityStage(batch))
-          val dups = Dedup.probeMinhashIndex(idx, corpus, gated,
-            "doc_id", "text", minBandMatches = 3)
-          val dupIds = dups.select("id_b")
-            .collect().map(_.getLong(0)).toSet
-          dups.unpersist(blocking = false)
-          val batchSurvivors = gated.select("doc_id")
-            .collect().map(_.getLong(0)).toSet -- dupIds
-          val landedIds = spark.read.parquet(out).select("doc_id")
-            .collect().map(_.getLong(0)).toSet
-          println(s"[im] gauntlet_equivalence | landed==batch-mode: " +
-            s"${landedIds == batchSurvivors} | landed=${landedIds.size} " +
-            s"batch=${batchSurvivors.size}")
-        }
       }
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 
   /** Permissive-but-real deterministic quality rules (only minTokens

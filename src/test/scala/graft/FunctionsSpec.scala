@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -120,41 +121,55 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("minhash_fold: codegen == interpreted; misuse fails loudly") {
-    val P = 2147483647L
-    val df = Seq(Some(0L), Some(1L), Some(P - 1), Some(123456789L),
-      None).toDF("h")
-    val expr = call_function("minhash_fold", $"h",
-      lit(Int.MaxValue - 1L), lit(987654321L))
-    val ref = df.select(pmod($"h" * (Int.MaxValue - 1L) + 987654321L,
-      lit(P)).as("r")).collect().toSeq
-    val got = df.select(expr.as("r")).collect().toSeq
-    assert(got == ref) // null propagated, values == pmod
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(df.select(expr.as("r")).collect().toSeq == ref)
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.unset("spark.sql.codegen.factoryMode")
+  test("minhash_sigs: SQL-callable, NULL on all-null groups; misuse fails loudly") {
+    // SQL callable with constant arrays: per component
+    // min((h*a_i + b_i) mod P) over the group — h in {5, 2}:
+    // a=3,b=1 → min(16, 7); a=5,b=0 → min(25, 10)
+    assert(spark.sql(
+      "SELECT minhash_sigs(h, array(3L, 5L), array(1L, 0L)) AS r " +
+        "FROM VALUES (5L), (2L) AS t(h)")
+      .head().getSeq[Long](0) == Seq(7L, 10L))
+    val as = typedlit(Array(3L, 5L))
+    val bs = typedlit(Array(1L, 0L))
+    def sigs(df: DataFrame, h: Column, a: Column, b: Column) =
+      df.groupBy("g").agg(call_function("minhash_sigs", h, a, b).as("r"))
+        .orderBy("g").collect().toSeq
+    // misuse must fail naming the function, not with some unrelated
+    // error (analysis failures and task failures both carry it)
+    def rejects(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("minhash_sigs")),
+        s"unexpected failure: $e")
     }
-    // SQL callable with constant args
-    assert(spark.sql("SELECT minhash_fold(5L, 3L, 1L) AS r")
-      .head().getLong(0) == 16L)
-    // non-constant a/b rejected at analysis (they embed into codegen)
-    intercept[Exception] {
-      df.select(call_function("minhash_fold", $"h", $"h", lit(0L)))
-        .collect()
+    val df = Seq((1L, Some(5L)), (1L, None), (2L, None), (2L, None))
+      .toDF("g", "h")
+    // a group whose every h is NULL is a NULL array (MIN semantics),
+    // a group with some NULLs ignores them
+    val got = sigs(df, $"h", as, bs)
+    assert(got.map(_.getSeq[Long](1)) == Seq(Seq(16L, 25L), null))
+    // non-constant a/b rejected at analysis (they are read once per
+    // aggregate, not per row)
+    rejects {
+      sigs(df, $"h", array($"h"), bs)
     }
-    // out-of-range multiplier rejected loudly, not silently wrapped
-    intercept[Exception] {
-      df.select(call_function("minhash_fold", $"h",
-        lit(1L << 40), lit(0L))).collect()
+    // unequal and empty arrays rejected
+    rejects {
+      sigs(df, $"h", typedlit(Array(3L, 5L, 7L)), bs)
     }
-    // non-bigint argument rejected at analysis
-    intercept[Exception] {
-      Seq("x").toDF("s")
-        .select(call_function("minhash_fold", $"s", lit(1L), lit(0L)))
-        .collect()
+    rejects {
+      sigs(df, $"h", typedlit(Array.empty[Long]), typedlit(Array.empty[Long]))
+    }
+    // constants outside [0, 2^31) rejected loudly, not silently wrapped
+    rejects {
+      sigs(df, $"h", typedlit(Array(1L << 40, 5L)), bs)
+    }
+    rejects {
+      sigs(df, $"h", as, typedlit(Array(-1L, 0L)))
+    }
+    // non-bigint h rejected at analysis
+    rejects {
+      sigs(Seq((1L, "x")).toDF("g", "s"), $"s", as, bs)
     }
   }
 

@@ -71,25 +71,6 @@ class LlmSpec extends SparkSpec {
     } finally spark.conf.unset("graft.dedup.estimateSemiJoinMinCorpus")
   }
 
-  test("one-buffer signature aggregate yields the identical pair set") {
-    // graft.dedup.sigAgg (the default) swaps 128 codegen'd MIN
-    // aggregates for one typed aggregate over a primitive long[] —
-    // same affine family, so signatures (and therefore bands,
-    // candidates, and verified pairs) must be byte-identical to the
-    // per-column MIN formulation (the opt-out arm)
-    def run() = Dedup.minhashNearDups(docs, "doc_id", "text",
-      threshold = 0.8)
-    val agg = run().as[(Long, Long, Double)].collect().toSet
-    spark.conf.set("graft.dedup.sigAgg", "false")
-    val mins =
-      try run().as[(Long, Long, Double)].collect().toSet
-      finally spark.conf.unset("graft.dedup.sigAgg")
-    assert(agg == mins,
-      s"sigAgg pair set diverged: only-mins ${(mins -- agg).take(3)}, " +
-        s"only-agg ${(agg -- mins).take(3)}")
-    assert(agg.nonEmpty)
-  }
-
   test("OPH signature family finds the identical verified pair set") {
     // a DIFFERENT hash family (one-permutation + rotation
     // densification): signatures, bands, and candidates all differ
@@ -243,31 +224,6 @@ class LlmSpec extends SparkSpec {
       Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
         numHashes = 64)
     }
-  }
-
-  test("probe map-side sketch cut yields the identical pair set") {
-    // the probe's cut is on by default (no corpus knee — see the
-    // no-widened-exchange rationale at the call site); pin the
-    // opted-out plan row-identical: the cut is a prefilter under the
-    // funnel's 6σ recall contract, survivors still exact-verified
-    val corpus = docs.filter($"doc_id" < 400)
-    val batch = docs.filter($"doc_id" >= 400)
-    val idx = tmpDir("mh-probe-sketch")
-    Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
-    def probe() = Dedup.probeMinhashIndex(idx, corpus, batch,
-        "doc_id", "text", threshold = 0.8, minBandMatches = 3)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val withCut = probe()
-    spark.conf.set("graft.dedup.probePairSketch", "false")
-    val without =
-      try probe()
-      finally spark.conf.unset("graft.dedup.probePairSketch")
-    assert(withCut == without,
-      s"probe sketch-cut pair set diverged: only-cut " +
-        s"${(withCut -- without).take(3)}, only-plain " +
-        s"${(without -- withCut).take(3)}")
-    assert(withCut.nonEmpty)
   }
 
   test("probe over-cap shuffled fallback returns identical pairs") {
@@ -961,8 +917,8 @@ class LlmSpec extends SparkSpec {
          t <- Seq(0.4, 0.9, 0.99))
       assert(Similarity.autoLshParams(n, t) == (32, 8),
         s"n=$n t=$t must resolve to the legacy geometry")
-    // at the CosineEscapeCheck-measured N=200k escape point the gate
-    // engages near the measured (r=14, b=90): enumeration at r=8
+    // at the N=200k escape point (SCALING.md round-11, factor 100)
+    // the gate engages near the measured (r=14, b=90): enumeration at r=8
     // would be 2.5e9 comparisons (it measured 2.97e9 in production)
     val (b200k, r200k) = Similarity.autoLshParams(200050L, 0.9)
     assert(r200k >= 12 && r200k <= 15,
@@ -2371,7 +2327,8 @@ class LlmSpec extends SparkSpec {
 
   test("lzProxyRatio map kernel == relational formulation, astral chars") {
     // the kernel walks CODE POINTS so astral (surrogate-pair) chars
-    // must gram exactly like Spark's substring in the relational path
+    // must gram exactly like Spark's substring in the relational
+    // formulation
     val docs = Tables.read(spark, sf, "documents").limit(200)
       .select($"doc_id", $"text")
     val astral = Seq(
@@ -2380,14 +2337,25 @@ class LlmSpec extends SparkSpec {
       (9003L, null.asInstanceOf[String]),
       (9004L, "short")).toDF("doc_id", "text")
     val corpus = docs.unionByName(astral)
-    def rows(kernel: Boolean): Seq[String] = {
-      spark.conf.set("graft.text.lzMapKernel", kernel.toString)
-      try TextAnalysis.lzProxyRatio(corpus, "doc_id", "text")
-        .orderBy("id").collect().map(_.toString).toSeq
-      finally spark.conf.unset("graft.text.lzMapKernel")
-    }
-    val kernel = rows(true)
-    assert(kernel.nonEmpty && kernel == rows(false))
+    val k = 8
+    val kernel = TextAnalysis.lzProxyRatio(corpus, "doc_id", "text", k)
+      .orderBy("id").collect().map(_.toString).toSeq
+    // reference: the explode + countDistinct formulation over Spark's
+    // substring, with the operator's own cost/ratio expressions
+    val relational = corpus
+      .select($"doc_id".cast("long").as("id"), $"text".as("t"))
+      .filter(length($"t") >= k)
+      .select($"id", length($"t").cast("long").as("n_chars"),
+        explode(expr(s"transform(sequence(1, length(t) - ${k - 1}), " +
+          s"i -> substring(t, i, $k))")).as("g"))
+      .groupBy("id", "n_chars")
+      .agg(count(lit(1)).as("n_grams"), countDistinct($"g").as("n_novel"))
+      .select($"id", $"n_chars", $"n_grams", $"n_novel",
+        ($"n_novel" * k + ($"n_grams" - $"n_novel") * 3).as("lz_cost"),
+        round(($"n_novel" * k + ($"n_grams" - $"n_novel") * 3)
+          .cast("double") / ($"n_grams" * k), 6).as("lz_ratio"))
+      .orderBy("id").collect().map(_.toString).toSeq
+    assert(kernel.nonEmpty && kernel == relational)
   }
 
   test("ngramContainmentJoin equals all-pairs exact containment") {

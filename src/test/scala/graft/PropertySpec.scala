@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -644,19 +645,20 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("minhash_fold equals pmod(h*a + b, P) on the affine domain") {
-    // the division-free fold must be VALUE-identical to the pmod
-    // reduction on every input signaturesOf can produce — h < P,
-    // a, b < 2^31 — or signatures (and every persisted index)
-    // silently change. Random interior points plus boundary cases
-    // where the conditional subtract engages (h·a + b landing on
-    // multiples of P and the fold's carry edges).
+  test("minhash_sigs equals per-component min(pmod(h*a + b, P)) on the affine domain") {
+    // the aggregate's inlined division-free Mersenne fold must be
+    // VALUE-identical to the pmod reduction on every input
+    // signaturesOf can produce — h < P, a, b < 2^31 — or signatures
+    // (and every persisted index) silently change. Random interior
+    // points plus boundary cases where the conditional subtract
+    // engages (h·a + b landing on multiples of P and the fold's carry
+    // edges).
     graft.functions.GraftFunctions.register(spark)
     val P = 2147483647L
     val rnd = new scala.util.Random(17)
     // h sweeps the full row domain (edges + random); (a, b) is a
     // fixed panel of per-hash constants, mirroring how signaturesOf
-    // embeds them (every hash's params are literals in the plan)
+    // embeds them (one constant array each in the plan)
     val hs = Seq(0L, 1L, 2L, P - 2, P - 1) ++
       Seq.fill(20000)(math.abs(rnd.nextLong()) % P)
     val params = Seq((1L, 0L), (1L, P - 1), (2L, 2L),
@@ -664,14 +666,23 @@ class PropertySpec extends SparkSpec {
       (Int.MaxValue - 1L, 0L)) ++
       Seq.fill(6)((rnd.nextInt(Int.MaxValue - 1).toLong + 1L,
         rnd.nextInt(Int.MaxValue).toLong))
-    val checks = params.zipWithIndex.map { case ((a, b), i) =>
-      (call_function("minhash_fold", col("h"), lit(a), lit(b)) ===
-        pmod(col("h") * lit(a) + lit(b), lit(P))).as(s"ok$i")
-    }
-    val bad = hs.toDF("h").select(col("h") +: checks: _*)
-      .filter(!params.indices.map(i => col(s"ok$i")).reduce(_ && _))
-      .collect()
-    assert(bad.isEmpty,
-      s"fold != pmod at ${bad.take(5).mkString(", ")}")
+    // every h alone in a group (pins each folded value) AND in one of
+    // 97 multi-row groups (pins the per-component min and merge)
+    val rows = hs.zipWithIndex.flatMap { case (h, i) =>
+      Seq((i.toLong, h), (-1L - i % 97, h))
+    }.toDF("g", "h")
+    def bySig(ms: Column): Map[Long, Seq[Long]] =
+      rows.groupBy("g").agg(ms.as("ms")).as[(Long, Seq[Long])]
+        .collect().toMap
+    val got = bySig(call_function("minhash_sigs", col("h"),
+      typedlit(params.map(_._1).toArray),
+      typedlit(params.map(_._2).toArray)))
+    val ref = bySig(array(params.map { case (a, b) =>
+      min(pmod(col("h") * lit(a) + lit(b), lit(P)))
+    }: _*))
+    assert(got.size == hs.size + 97 && got.keySet == ref.keySet)
+    val bad = got.collect { case (g, v) if v != ref(g) => (g, v, ref(g)) }
+      .take(5)
+    assert(bad.isEmpty, "minhash_sigs != min(pmod) at (group, got, want)")
   }
 }
