@@ -1,46 +1,8 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Aggregates executor-side task metrics per job group (= per bench
-  * query). Attribution is exact: the stage→group mapping is recorded
-  * at stage submission (the submitting thread's job group rides along
-  * in the stage properties), so listener-bus lag can't smear one
-  * query's tail onto the next.
-  */
-private class StageMetricsListener extends SparkListener {
-  private val stageGroup = TrieMap[Int, String]()
-  /** group -> (shuffleReadB, shuffleWriteB, memSpillB, diskSpillB,
-    * taskTimeMs, gcMs, tasks)
-    */
-  val agg = TrieMap[String, Array[Long]]()
-
-  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-    for {
-      props <- Option(e.properties)
-      g <- Option(props.getProperty("spark.jobGroup.id"))
-    } stageGroup.put(e.stageInfo.stageId, g)
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-    for {
-      g <- stageGroup.get(e.stageId)
-      m <- Option(e.taskMetrics)
-    } {
-      val a = agg.getOrElseUpdate(g, Array.fill(7)(0L))
-      a.synchronized {
-        a(0) += m.shuffleReadMetrics.totalBytesRead
-        a(1) += m.shuffleWriteMetrics.bytesWritten
-        a(2) += m.memoryBytesSpilled
-        a(3) += m.diskBytesSpilled
-        a(4) += m.executorRunTime
-        a(5) += m.jvmGCTime
-        a(6) += 1
-      }
-    }
-}
+import graft.obs.JobCosts
 
 /** Per-round benchmark main. Times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and emits one JSON line.
@@ -62,7 +24,7 @@ private class StageMetricsListener extends SparkListener {
   *     reads as a plausible fast timing) and lands in the "errors"
   *     list;
   *   - per-query executor metrics (shuffle read/write, spill, task
-  *     time, GC) are collected via a job-group-keyed listener and
+  *     time, GC, jobs) are rolled up per job group by `JobCosts` and
   *     emitted as "stageMetrics" (per-rep averages) — the difference
   *     between wall time and task time is driver/scheduling/codegen
   *     overhead, which is what distinguishes a real shuffle regression
@@ -182,11 +144,19 @@ object Bench {
     val spark = GraftSession.builder("graft-bench", s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
+    val compact = try suite(spark, sfDir, warmDir, reps) finally spark.stop()
+    println(compact)
+  }
+
+  /** Runs the suite, writes the full record and returns the compact
+    * stdout record.
+    */
+  private def suite(spark: SparkSession, sfDir: String, warmDir: String,
+                    reps: Int): String = {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.applyEngineConf(spark)
     val sc = spark.sparkContext
-    val metrics = new StageMetricsListener
-    sc.addSparkListener(metrics)
+    val costs = JobCosts.install(sc)
 
     /** Runs one query and returns the ACTION's elapsed seconds. The
       * boundary cleanup is OUTSIDE the timed window — it is harness
@@ -288,9 +258,7 @@ object Bench {
       }
     }
     val calibPost = calibrate(spark, 3)
-    // the listener bus is async; give in-flight task-end events a
-    // moment to land before reading the aggregates
-    Thread.sleep(2000)
+    val groups = costs.drain().groups
 
     def median(xs: List[Double]): Double = {
       val s = xs.sorted
@@ -323,14 +291,15 @@ object Bench {
     // finished) — emit metrics only for clean queries
     val sm = names.filterNot(failed).flatMap { name =>
       val n = math.max(timings(name).size, 1)
-      metrics.agg.get(name).map { a =>
+      groups.get(name).filter(_.tasks > 0).map { c =>
         "\"" + name + "\":{" +
-          s""""shuffle_read_mb":${r3(a(0) / 1e6 / n)},""" +
-          s""""shuffle_write_mb":${r3(a(1) / 1e6 / n)},""" +
-          s""""spill_mb":${r3((a(2) + a(3)) / 1e6 / n)},""" +
-          s""""task_sec":${r3(a(4) / 1e3 / n)},""" +
-          s""""gc_sec":${r3(a(5) / 1e3 / n)},""" +
-          s""""tasks":${a(6) / n}}"""
+          s""""shuffle_read_mb":${r3(c.shuffleReadBytes / 1e6 / n)},""" +
+          s""""shuffle_write_mb":${r3(c.shuffleWriteBytes / 1e6 / n)},""" +
+          s""""spill_mb":${r3(c.spillBytes / 1e6 / n)},""" +
+          s""""task_sec":${r3(c.runMs / 1e3 / n)},""" +
+          s""""gc_sec":${r3(c.gcMs / 1e3 / n)},""" +
+          s""""tasks":${c.tasks / n},""" +
+          s""""jobs":${c.jobs / n}}"""
       }
     }.mkString("{", ",", "}")
     // recorded idle-machine medians (bench_clean_medians.json,
@@ -412,9 +381,6 @@ object Bench {
     // "parsed": null proved anything bigger loses its head. Per-query
     // medians live in bench_out.json ("record") and the committed
     // bench_clean_medians.json.
-    val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"nQueries":${results.size},"instrumentation_sec":${r3(instrumentationSec)},"errors":$errs,$calib,"record":"$out","sf":"$sfDir"}"""
-    spark.stop()
-    println(compact)
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"nQueries":${results.size},"instrumentation_sec":${r3(instrumentationSec)},"errors":$errs,$calib,"record":"$out","sf":"$sfDir"}"""
   }
 }

@@ -69,6 +69,11 @@ object Plans {
     val out = args.lift(1).getOrElse("PLANS.md")
     val spark = GraftSession.builder("graft-plans", "local[4]")
       .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    try write(spark, sfDir, out) finally spark.stop()
+  }
+
+  private def write(spark: org.apache.spark.sql.SparkSession,
+                    sfDir: String, out: String): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
 
     val showcase: Seq[(String, String)] = Seq(
@@ -491,6 +496,5 @@ object Plans {
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out (${changed.size} appendix plans changed, " +
       s"${appendix.count(a => !prevDigests.contains(a._1))} new)")
-    spark.stop()
   }
 }

@@ -618,8 +618,8 @@ object QueriesLlm {
     // subtree (the pair funnel, the dedup anti-join, two funnel
     // aggregates, the packing input) — four serial ~2.2 task-sec
     // single-task re-evaluations of the same gate at sf0.1
-    // (JobBreakdown r14). Values are unchanged: the same rows flow
-    // into every stage, they are just computed once.
+    // (OPTIMIZATION_r14.md §3). Values are unchanged: the same rows
+    // flow into every stage, they are just computed once.
     val docsS = graft.llm.InputSpread.spreadSmallScan(
       docs.select(col("doc_id"), col("text")), "doc_id")
     val quality = docsS.join(

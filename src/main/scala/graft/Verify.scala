@@ -18,40 +18,41 @@ object Verify {
     val spark = GraftSession.builder("graft-verify", s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.applyEngineConf(spark)
-    new java.io.File(outDir).mkdirs()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      GraftSession.applyEngineConf(spark)
+      new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // written BEFORE the query loop: a mid-run crash then still leaves
-    // a comparable partial dump instead of parquet with no oracle file
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      // JSON string escape: backslash, quote, and ALL control chars
+      // (<0x20) — a tab or CR in the oracle SQL would otherwise make a
+      // JSON reader fail and silently drop the whole oracle compare.
+      def q(s: String): String = "\"" + s.flatMap {
+        case '"'  => "\\\""
+        case '\\' => "\\\\"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+      // written BEFORE the query loop: a mid-run crash then still leaves
+      // a comparable partial dump instead of parquet with no oracle file
+      val json = SparkEntry.oracleSql
+        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      // NonFatal only: an OutOfMemoryError/LinkageError means the JVM
-      // is broken — continuing would report every later query as an
-      // independent failure instead of the one real crash
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally spark.catalog.clearCache() // free per-query persists
-    }
-    spark.stop()
+      SparkEntry.queries
+        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        // NonFatal only: an OutOfMemoryError/LinkageError means the JVM
+        // is broken — continuing would report every later query as an
+        // independent failure instead of the one real crash
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        } finally spark.catalog.clearCache() // free per-query persists
+      }
+    } finally spark.stop()
   }
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * buffer — the alternative formulation to `n` separate `MIN`
   * aggregate expressions.
   *
-  * Why: the 500k-doc JobBreakdown put ~46% of post-cut q31 task-sec
-  * in the signature jobs, and the measured signature-reduction ladder
+  * Why: the 500k-doc per-job costs put ~46% of post-cut q31 task-sec
+  * in the signature jobs (SCALING.md "replaces 128 MIN expressions"),
+  * and the measured signature-reduction ladder
   * (BENCHNOTES round-13) showed the cost is NOT the modulo (C2
   * strength-reduces the constant divisor) but the per-row update
   * machinery — 128 aggregate-expression evaluations + UnsafeRow

@@ -30,12 +30,6 @@ import graft.exceptions._
   */
 object Bpe {
 
-  /** Diagnostic: rounds (pair-count scans) used by the most recent
-    * `trainBpeMerges` call in this JVM — the jobs-per-vocab evidence
-    * SCALING.md records. Not part of the API surface.
-    */
-  @volatile private[graft] var lastTrainRounds: Int = 0
-
   /** One left-to-right, non-overlapping merge application — shared by
     * distributed training, segmentation, and the spec's in-memory
     * reference (being literally the same function is what makes the
@@ -179,7 +173,6 @@ object Bpe {
     if (maxDriverWords > 0 && wordFreq.count() <= maxDriverWords) {
       // tier 1: the compressed corpus fits on the driver — one
       // collect, zero Spark jobs per merge
-      lastTrainRounds = 0
       return trainInMemory(wordFreq.collect(), numMerges)
     }
     // tracked-checkpoint machinery (graft.operators.Lineage): each
@@ -204,7 +197,6 @@ object Bpe {
 
     val merges = scala.collection.mutable.ListBuffer.empty[(String, String)]
     var done = false
-    var rounds = 0
     // bound-job backoff: on tie-heavy corpora the context-triple job
     // keeps getting paid only to reject the whole batch — when a
     // bound round accepts a single merge anyway, skip the bound job
@@ -214,7 +206,6 @@ object Bpe {
     var skipBoundRounds = 0
     var boundBackoff = 1
     while (merges.size < numMerges && !done) {
-      rounds += 1
       val want = math.min(maxBatch, numMerges - merges.size)
       val cands = words.flatMap { case (syms, cnt) =>
         (0 until syms.length - 1).iterator
@@ -325,7 +316,6 @@ object Bpe {
       }
     }
     ckptRdds.foreach(_.unpersist(false))
-    lastTrainRounds = rounds
     merges.toList
   }
 

@@ -366,14 +366,15 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Map-side sketch cut on the PAIR-BAND exchange (round-13): the
-    // decade JobBreakdown at 500k open-vocab docs put ~85% of q31's
+    // per-job costs at 500k open-vocab docs put ~85% of q31's
     // shuffle (6.3 GB of 7.4 GB written) in ONE exchange — the
     // (id_a, id_b) rows the band self-join emits toward the
     // band-agreement count, a mass that grew 30×/decade while every
     // other funnel exchange stayed ~linear (moderately-similar
     // background pairs band-collide ever more densely as the corpus
-    // grows). The same 6σ signature-estimate the funnel already
-    // applies AFTER that exchange is applied HERE map-side, on a
+    // grows; SCALING.md "sketch cut (verdict #1)"). The same 6σ
+    // signature-estimate the funnel already applies AFTER that
+    // exchange is applied HERE map-side, on a
     // 32-byte truncation of the signature carried with each banded
     // row: a pair whose byte-match estimate sits below threshold − 6σ
     // dies inside the join stage, before the exchange. Identical to
@@ -1012,8 +1013,8 @@ object Dedup {
     *   partitioning — opt out: for them the spread's exchange plus
     *   per-task overhead exceeds the serial map it parallelizes
     *   (driver r13 measured q126_gram_novelty 0.72× wall from
-    *   exactly this; r14 JobBreakdown: the whole query is ~2.4
-    *   task-sec, nothing to parallelize). At production scale the
+    *   exactly this; the whole query is ~2.4 task-sec, nothing to
+    *   parallelize — OPTIMIZATION_r14.md §2). At production scale the
     *   gate is inert either way (files ≥ cores).
     */
   private def wordGramRows(df: DataFrame, idCol: String,
@@ -1332,12 +1333,13 @@ object Dedup {
     // clean corpus yields orders of magnitude fewer pairs than docs),
     // and the distributed pointer-jump loop pays ~10 AQE stage-jobs
     // per round in pure scheduling latency — measured as q130's
-    // 80-tiny-job tail (~8 s wall for ~0 task-sec, JobBreakdown
-    // round 9). When the counted edge set fits comfortably on the
-    // driver, run min-root union-find locally: IDENTICAL labels
-    // (min-propagation converges to the component min; union-find
-    // tracks the same min), two jobs total, and the returned
-    // LocalRelation broadcasts into every downstream join for free.
+    // 80-tiny-job tail (~8 s wall for ~0 task-sec, BENCHNOTES
+    // "Round-9: the dupClusters barrier collapse"). When the counted
+    // edge set fits comfortably on the driver, run min-root
+    // union-find locally: IDENTICAL labels (min-propagation converges
+    // to the component min; union-find tracks the same min), two jobs
+    // total, and the returned LocalRelation broadcasts into every
+    // downstream join for free.
     // The count-BEFORE-collect is the bounded-collect contract: an
     // over-cap graph never reaches the driver, it takes the
     // distributed loop below. `graft.dedup.maxDriverEdges <= 0` opts

@@ -4,7 +4,7 @@ import graft.{GraftSession, SparkEntry}
 
 /** Count a registered query's (or ScaleMeasure extra's) result rows
   * at an arbitrary data dir — the recall companion to ScaleMeasure
-  * for parameter-lever comparisons (e.g. q31 vs q31_bucketcap pair
+  * for parameter-lever comparisons (e.g. q31 vs q31_uncapped pair
   * counts: cost tables alone can hide a recall trade).
   *
   * Usage: runMain graft.tools.CountQuery <sfDir> <name>[,<name>...]

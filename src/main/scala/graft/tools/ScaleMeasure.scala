@@ -1,16 +1,20 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{GraftSession, SparkEntry}
+import graft.obs.{Cost, JobCost, JobCosts}
 
 /** Scaling-decade measurement harness (SCALING.md's data source for
   * the sf1 decade): times the six dedup heavies at one scale dir with
   * per-query stage metrics, Bench's methodology (noop write action,
-  * interleaved reps, job-group-keyed listener) without requiring the
-  * non-documents tables the full bench needs.
+  * interleaved reps, `JobCosts` rolled up per job group) without
+  * requiring the non-documents tables the full bench needs.
+  *
+  * For the last timed rep of each query, stderr gets one `[jobs]` line
+  * per Spark job (task-seconds, shuffle read/write, tasks, call site):
+  * when a funnel's total task-seconds move, these show WHICH internal
+  * action (checkpoint job, count, verify) paid.
   *
   * PROTOCOL for A/B comparisons (round-12 lesson): do NOT interleave
   * the two arms in one invocation. Cross-query GC debt in the shared
@@ -33,8 +37,7 @@ object ScaleMeasure {
     * possible 3-grams saturate at 50k docs; 31⁵ does not).
     */
   private[tools] val Extras: Map[String,
-      (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
+      (SparkSession, String) => DataFrame] = Map(
     "q55_n5" -> ((s, dir) =>
       graft.llm.Dedup.ngramJaccardNearDups(
         graft.Tables.read(s, dir, "documents"), "doc_id", "text",
@@ -68,21 +71,12 @@ object ScaleMeasure {
             regexp_replace(col("text"), " the ", "\n").as("text")),
         "doc_id", "text")
     }),
-    // q31 with the band-bucket cap engaged: the open-vocab sf3 point
-    // showed the N² term is the band-pair ENUMERATION from flooded
-    // common-shingle buckets (before minBandMatches filters them) —
-    // the cap skips those buckets at the source. Recall contract: a
-    // 0.8-Jaccard pair still collides in its rare-content bands, and
-    // every surviving candidate is exact-verified, so capped output
-    // is a verified subset (compare pair counts across the runs).
-    // Since round 9 the cap is minhashNearDups' DEFAULT (2000), so
-    // this entry now equals the registered q31 path; q31_uncapped
-    // measures the opt-out for the capped-vs-raw decade comparison.
-    "q31_bucketcap" -> ((s, dir) =>
-      graft.llm.Dedup.minhashNearDups(
-        graft.Tables.read(s, dir, "documents"), "doc_id", "text",
-        shingleK = 4, numHashes = 128, bands = 32, threshold = 0.8,
-        minBandMatches = 3, maxBandBucket = 2000)),
+    // q31 with the band-bucket cap off: the open-vocab sf3 point showed
+    // the N² term is the band-pair ENUMERATION from flooded
+    // common-shingle buckets, which minhashNearDups' default cap
+    // (2000) skips at the source. Against q31_dedup_minhash this is
+    // the capped-vs-raw decade comparison; capped output is a verified
+    // subset (compare pair counts across the runs).
     "q31_uncapped" -> ((s, dir) =>
       graft.llm.Dedup.minhashNearDups(
         graft.Tables.read(s, dir, "documents"), "doc_id", "text",
@@ -186,9 +180,24 @@ object ScaleMeasure {
           .select(explode(graft.llm.Dedup.shingles(col("text"), 4))
             .as("g")),
         "g", k = 100)
-    }))
+    }),
+    // BPE trainer tiers over the documents table (SCALING.md's
+    // jobs-per-vocab table), as (maxBatch, maxDriverWords): in-memory,
+    // distributed batched, distributed one merge per round
+    "bpe_tier1" -> bpe(256, 2000000L),
+    "bpe_batched" -> bpe(256, 0L),
+    "bpe_sequential" -> bpe(1, 0L))
 
-  private def cosineGeom(s: org.apache.spark.sql.SparkSession,
+  /** 500 merges, fewer once the corpus' pair space is exhausted. */
+  private def bpe(maxBatch: Int, maxDriverWords: Long)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    import s.implicits._
+    graft.llm.Bpe.trainBpeMerges(graft.Tables.read(s, dir, "documents"),
+      "text", numMerges = 500, maxBatch, maxDriverWords)
+      .toDF("left", "right")
+  }
+
+  private def cosineGeom(s: SparkSession,
                          dir: String, bands: Int, planes: Int) = {
     import org.apache.spark.sql.functions.{col, transform}
     val emb = graft.Tables.read(s, dir, "embeddings")
@@ -202,31 +211,15 @@ object ScaleMeasure {
       threshold = 0.9, bands = bands, planesPerBand = planes)
   }
 
-  private class Listener extends SparkListener {
-    private val stageGroup = TrieMap[Int, String]()
-    val agg = TrieMap[String, Array[Long]]() // shuffleR, shuffleW, taskMs, tasks, gcMs
+  /** One job's `[jobs]` stderr line. */
+  private[tools] def jobLine(j: JobCost): String =
+    f"[jobs] ${j.jobId}%5d | ${j.cost.runMs / 1e3}%8.1f | " +
+      f"${j.cost.shuffleReadBytes / 1e6}%8.1f | " +
+      f"${j.cost.shuffleWriteBytes / 1e6}%8.1f | ${j.cost.tasks}%5d | " +
+      j.description.replaceAll("\\s+", " ").trim.take(100)
 
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      for {
-        props <- Option(e.properties)
-        g <- Option(props.getProperty("spark.jobGroup.id"))
-      } stageGroup.put(e.stageInfo.stageId, g)
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      for {
-        g <- stageGroup.get(e.stageId)
-        m <- Option(e.taskMetrics)
-      } {
-        val a = agg.getOrElseUpdate(g, Array.fill(5)(0L))
-        a.synchronized {
-          a(0) += m.shuffleReadMetrics.totalBytesRead
-          a(1) += m.shuffleWriteMetrics.bytesWritten
-          a(2) += m.executorRunTime
-          a(3) += 1
-          a(4) += m.jvmGCTime
-        }
-      }
-  }
+  private[tools] val JobHeader =
+    "[jobs] jobId | task_sec | shufR_mb | shufW_mb | tasks | desc"
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/target/graft-sf1")
@@ -255,15 +248,16 @@ object ScaleMeasure {
           spark.conf.set(k, v)
         })
       val sc = spark.sparkContext
-      val listener = new Listener
-      sc.addSparkListener(listener)
+      val costs = JobCosts.install(sc)
 
       val timings = scala.collection.mutable.Map[String, List[Double]]()
         .withDefaultValue(Nil)
       // one untimed warmup pass, then interleaved timed reps
       for (rep <- 0 to reps; name <- names) {
         val fn = Extras.getOrElse(name, SparkEntry.queries(name))
-        if (rep > 0) sc.setJobGroup(name, s"scale $name")
+        // no job description, so each job is named by its call site
+        if (rep > 0) sc.setJobGroup(name, null)
+        val seen = if (rep == reps) costs.drain().jobs.size else 0
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -271,6 +265,12 @@ object ScaleMeasure {
           if (rep > 0) timings(name) ::= dt
           // live progress for multi-hour sweeps (stderr, not the table)
           System.err.println(f"[scale] rep=$rep $name ${dt}%.1f s")
+          if (rep == reps) {
+            System.err.println(s"[jobs] $name")
+            System.err.println(JobHeader)
+            costs.drain().jobs.drop(seen)
+              .foreach(j => System.err.println(jobLine(j)))
+          }
         } catch {
           // a failing query must not abort the whole sweep — record it
           // (-1 median, like Bench) and keep measuring the rest
@@ -288,18 +288,19 @@ object ScaleMeasure {
           if (rep > 0) sc.clearJobGroup()
         }
       }
-      Thread.sleep(2000)
+      val groups = costs.drain().groups
       def median(xs: List[Double]): Double = xs.sorted.apply(xs.size / 2)
       println(f"## $sfDir reps=$reps")
-      println("query | wall_median_s | shuffle_mb_per_rep | task_sec_per_rep | tasks_per_rep | gc_sec_per_rep")
+      println("query | wall_median_s | shuffle_mb_per_rep | task_sec_per_rep | tasks_per_rep | gc_sec_per_rep | jobs_per_rep")
       names.foreach { name =>
         val ts = timings(name)
-        val a = listener.agg.getOrElse(name, Array.fill(5)(0L))
+        val c = groups.getOrElse(name, Cost())
         val n = math.max(ts.size, 1)
         val m = if (ts.contains(-1.0)) -1.0 else median(ts)
         println(f"$name | $m%.2f | " +
-          f"${(a(0) + a(1)) / n / 1e6}%.2f | ${a(2) / n / 1e3}%.1f | ${a(3) / n} | " +
-          f"${a(4) / n / 1e3}%.1f")
+          f"${(c.shuffleReadBytes + c.shuffleWriteBytes) / n / 1e6}%.2f | " +
+          f"${c.runMs / n / 1e3}%.1f | ${c.tasks / n} | " +
+          f"${c.gcMs / n / 1e3}%.1f | ${c.jobs / n}")
       }
     } finally spark.stop()
   }

@@ -1,11 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{functions => F}
 
 import graft.GraftSession
+import graft.obs.{Cost, JobCosts}
 import graft.llm.Dedup
 import graft.streaming.Streaming
 
@@ -18,10 +16,10 @@ import graft.streaming.Streaming
   * mass, so the decade should move the index BUILD (linear) but leave
   * the per-batch probe near-flat.
   *
-  * Streaming microbatches run on the stream-execution thread, so the
-  * job-group trick can't attribute stages; nothing else runs during
-  * the measured window, so the listener sums ALL task metrics between
-  * the start/stop marks.
+  * Streaming micro-batches run under the job group Spark sets to the
+  * query's `runId`, so the timed pass's costs are that group's
+  * `JobCosts` roll-up (other work in the window is not counted); its
+  * 12 costliest jobs by task time follow as `[jobs]` lines.
   *
   * With the 3rd arg `novelty`/`noveltynaive`, the gram-novelty gate
   * (StreamingSpec's mosaic-catcher composition: keep docs with ≥ 30%
@@ -46,35 +44,6 @@ import graft.streaming.Streaming
   */
 object StreamIngestMeasure {
 
-  private class Totals extends SparkListener {
-    val on = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val shuffle = new AtomicLong(0)
-    val taskMs = new AtomicLong(0)
-    val tasks = new AtomicLong(0)
-    // per-stage attribution (diagnostic, printed with GRAFT_IM_STAGES=1):
-    // stage name -> (taskMs, tasks)
-    val byStage =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    private val stageName =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onStageSubmitted(
-        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      stageName.put(e.stageInfo.stageId, e.stageInfo.name.take(80))
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (on.get()) Option(e.taskMetrics).foreach { m =>
-        shuffle.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-          m.shuffleWriteMetrics.bytesWritten)
-        taskMs.addAndGet(m.executorRunTime)
-        tasks.incrementAndGet()
-        val n = Option(stageName.get(e.stageId)).getOrElse("?")
-        val a = byStage.computeIfAbsent(n, _ => Array.fill(2)(0L))
-        a.synchronized { a(0) += m.executorRunTime; a(1) += 1 }
-      }
-    def reset(): Unit = {
-      shuffle.set(0); taskMs.set(0); tasks.set(0); byStage.clear()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val docsPath = args(0)
     val label = args.lift(1).getOrElse("gen")
@@ -89,8 +58,7 @@ object StreamIngestMeasure {
     try {
       spark.sparkContext.setLogLevel("WARN")
       GraftSession.applyEngineConf(spark)
-      val listener = new Totals
-      spark.sparkContext.addSparkListener(listener)
+      val costs = JobCosts.install(spark.sparkContext)
       val baseFile = new java.io.File(s"target/im-$label")
       // clean slate: a leftover checkpoint would mark the batch already
       // processed (skewing landed counts) and a leftover index would be
@@ -143,7 +111,6 @@ object StreamIngestMeasure {
       for (rep <- 0 to 1) {
         val out = s"$base/clean-$rep"
         val ckpt = s"$base/ckpt-$rep"
-        if (rep == 1) { listener.reset(); listener.on.set(true) }
         val t1 = System.nanoTime()
         val gate: Option[org.apache.spark.sql.DataFrame =>
             org.apache.spark.sql.DataFrame] =
@@ -173,8 +140,9 @@ object StreamIngestMeasure {
         try q.processAllAvailable() finally q.stop()
         val wall = (System.nanoTime() - t1) / 1e9
         if (rep == 1) {
-          listener.on.set(false)
-          Thread.sleep(1500)
+          val run = q.runId.toString
+          val jobs = costs.drain().jobs.filter(_.group.contains(run))
+          val c = jobs.map(_.cost).foldLeft(Cost())(_ + _)
           val landed = spark.read.parquet(out).count()
           val tag =
             if (gauntlet) "probe_batch_gauntlet"
@@ -183,16 +151,12 @@ object StreamIngestMeasure {
             else if (noveltyGate) "probe_batch_novelty"
             else "probe_batch"
           println(f"[im] $tag | corpus=$nCorpus | wall=$wall%.2f s | " +
-            f"task=${listener.taskMs.get() / 1e3}%.1f s | " +
-            f"shuffle_mb=${listener.shuffle.get() / 1e6}%.2f | " +
-            f"tasks=${listener.tasks.get()} | landed=$landed")
-          if (sys.env.get("GRAFT_IM_STAGES").contains("1")) {
-            import scala.jdk.CollectionConverters._
-            listener.byStage.asScala.toSeq.sortBy(-_._2(0)).take(12)
-              .foreach { case (n, a) =>
-                println(f"[im-stage] ${a(0) / 1e3}%8.1f s | ${a(1)}%5d | $n")
-              }
-          }
+            f"task=${c.runMs / 1e3}%.1f s | " +
+            f"shuffle_mb=${(c.shuffleReadBytes + c.shuffleWriteBytes) / 1e6}%.2f | " +
+            f"tasks=${c.tasks} | landed=$landed")
+          println(ScaleMeasure.JobHeader)
+          jobs.sortBy(-_.cost.runMs).take(12)
+            .foreach(j => println(ScaleMeasure.jobLine(j)))
           if (gauntlet) {
             // batch-mode replay of the same composed pipeline: the
             // landed set must be EXACTLY the batch-mode survivors

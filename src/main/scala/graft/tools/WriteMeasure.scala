@@ -1,11 +1,9 @@
 package graft.tools
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{functions => F}
 
 import graft.GraftSession
+import graft.obs.{Cost, JobCosts}
 import graft.sinks.Writer
 import graft.sources.FsOps
 
@@ -24,26 +22,6 @@ import graft.sources.FsOps
   */
 object WriteMeasure {
 
-  private class Listener extends SparkListener {
-    private val stageGroup = TrieMap[Int, String]()
-    val agg = TrieMap[String, Array[Long]]() // taskMs, tasks
-
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      for {
-        props <- Option(e.properties)
-        g <- Option(props.getProperty("spark.jobGroup.id"))
-      } stageGroup.put(e.stageInfo.stageId, g)
-
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      for {
-        g <- stageGroup.get(e.stageId)
-        m <- Option(e.taskMetrics)
-      } {
-        val a = agg.getOrElseUpdate(g, Array.fill(2)(0L))
-        a.synchronized { a(0) += m.executorRunTime; a(1) += 1 }
-      }
-  }
-
   def main(args: Array[String]): Unit = {
     val docsPath = args(0)
     val label = args.lift(1).getOrElse("gen")
@@ -56,8 +34,7 @@ object WriteMeasure {
       spark.sparkContext.setLogLevel("WARN")
       GraftSession.applyEngineConf(spark)
       val sc = spark.sparkContext
-      val listener = new Listener
-      sc.addSparkListener(listener)
+      val costs = JobCosts.install(sc)
 
       val docs = spark.read.parquet(docsPath)
         .select("doc_id", "lang", "source", "text")
@@ -79,8 +56,8 @@ object WriteMeasure {
       }
 
       def report(name: String, wall: Double, extra: String): Unit = {
-        val a = listener.agg.getOrElse(name, Array.fill(2)(0L))
-        println(f"[wm] $name | wall=$wall%.2f s | task=${a(0) / 1e3}%.1f s | tasks=${a(1)} | $extra")
+        val c = costs.drain().groups.getOrElse(name, Cost())
+        println(f"[wm] $name | wall=$wall%.2f s | task=${c.runMs / 1e3}%.1f s | tasks=${c.tasks} | $extra")
       }
 
       // 1. seed: full overwrite, partitioned by source (20 partitions)
@@ -128,8 +105,6 @@ object WriteMeasure {
       }
       report("compact", wC,
         s"files_before=$preFiles files_after=${stats.filesAfter} rows=${stats.rows}")
-
-      Thread.sleep(1500)
     } finally spark.stop()
   }
 }
