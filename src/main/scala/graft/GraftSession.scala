@@ -43,19 +43,9 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Cached-plan AQE stays at the Spark default (false) SESSION-
-      // WIDE and is turned on PER OPERATOR via
-      // graft.operators.AdaptiveCache where it measurably wins
-      // (quantiles, data cards, winnow pairs): off, every exchange
-      // below a persist() materializes at the raw
-      // spark.sql.shuffle.partitions with no coalescing — measured
-      // r14: q135 ran 1401 tasks / 40 executor-task-sec for 0.4 MB
-      // of shuffle at 32 cores vs 10 task-sec at 8 cores, pure
-      // per-task overhead. A session-wide `true` was measured and
-      // REJECTED: the dedup probe/funnel family regressed 1.2–1.5×
-      // (GC-coupled task-sec inflation in the 128-column signature
-      // caches) while the quantile/card family improved ~0.8× — the
-      // scoped helper keeps the win without the loss.
+      // Cached-plan AQE stays off SESSION-WIDE; the operators where it
+      // measurably wins hold it for their own persists through
+      // graft.operators.OperatorScope (CachedPlanAqe has the numbers).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "false")
       .config("spark.sql.session.timeZone", "UTC")

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * map falls back to sort-based aggregation past
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * distinct keys per partition (Spark default 128 — far below a
-  * shingle corpus' per-partition doc count; `GraftSession` raises
-  * it, and the buffers are ~8·n bytes each so a million keys is
-  * ~1 GB per partition worst case).
+  * shingle corpus' per-partition doc count; the minhash operators
+  * raise it for their own run through `OperatorScope.ObjectAggThreshold`,
+  * and the buffers are ~8·n bytes each so a million keys is ~1 GB per
+  * partition worst case).
   *
   * Value contract: byte-identical to the `n` separate
   * `min(pmod(h * a_i + b_i, P))` columns for h in [0, P) and

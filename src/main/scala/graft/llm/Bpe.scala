@@ -135,10 +135,9 @@ object Bpe {
     * final), i.e. ~2^N growth. Measured: a 500-merge train with
     * 32-round rotation OOMs the driver building `explainString`
     * around round ~100; per-round checkpoint keeps the plan a flat
-    * scan. Checkpoint blocks live outside the CacheManager (plain
-    * `unpersist` can't free them), so each round's new blocks are
-    * captured by diffing `getPersistentRDDs` and explicitly released
-    * when superseded — exactly `Dedup.dupClusters`.
+    * scan. Each round's checkpoint is held by the training's
+    * `OperatorScope` and released as soon as the next round's lands —
+    * exactly `Dedup.dupClusters`.
     *
     * At 100 TB the word table is ~10⁸ rows — a small DataFrame — and
     * real tokenizers train on a corpus sample anyway
@@ -175,16 +174,10 @@ object Bpe {
       // collect, zero Spark jobs per merge
       return trainInMemory(wordFreq.collect(), numMerges)
     }
-    // tracked-checkpoint machinery (graft.operators.Lineage): each
-    // eager localCheckpoint hands back its own backing RDD blocks so
-    // superseded checkpoints can be freed the moment the next one
-    // lands — taken from the frame itself, never a getPersistentRDDs
-    // diff (which captures concurrent queries' blocks)
-    def checkpointTracked[T](ds: org.apache.spark.sql.Dataset[T])
-        : (org.apache.spark.sql.Dataset[T],
-           Seq[org.apache.spark.rdd.RDD[_]]) =
-      graft.operators.Lineage.checkpointTracked(ds)
-    var (words, ckptRdds) = checkpointTracked(wordFreq
+    // each round's eager localCheckpoint is freed the moment the next
+    // one lands; whatever is still held is released on exit
+    graft.operators.OperatorScope(spark) { scope =>
+    var words = scope.checkpoint(wordFreq
       .map { case (w, cnt) => (w.map(_.toString).toArray, cnt) })
 
     // every symbol string that exists or has ever existed (symbols
@@ -303,20 +296,19 @@ object Bpe {
         // in rank order in ONE pass (they commute — disjoint — but
         // rank order keeps the semantics literally sequential).
         val bl = batch
-        val (cp, added) = checkpointTracked(words.map { case (syms, cnt) =>
+        val cp = scope.checkpoint(words.map { case (syms, cnt) =>
           var s = syms
           bl.foreach { case (a, b) =>
             if (s.length > 1) s = applyMerge(s, a, b)
           }
           (s, cnt)
         })
+        scope.release(words)
         words = cp
-        ckptRdds.foreach(_.unpersist(false))
-        ckptRdds = added
       }
     }
-    ckptRdds.foreach(_.unpersist(false))
     merges.toList
+    }
   }
 
   /** The tier-1 merge loop: classic fast BPE over a collected

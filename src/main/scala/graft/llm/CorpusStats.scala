@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exceptions._
+import graft.operators.OperatorScope
 
 /** Corpus-level statistical diagnostics for training-data curation —
   * the "what is in this 100 TB pile" layer that sits above the
@@ -65,9 +66,9 @@ object CorpusStats {
     if (smoothing <= 0 || smoothing.isNaN)
       throw InvalidArgumentValue(
         s"smoothing must be positive, got $smoothing")
-    // scoped cached-plan AQE (see AdaptiveCache): every persisted
-    // frame here is dimension-sized (≤ groups × buckets rows)
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe): every
+    // persisted frame here is dimension-sized (≤ groups × buckets rows)
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
     val lam = smoothing
     val lamB = smoothing * numBuckets
     val toks = df.select(col(groupCol).as("grp"),
@@ -80,8 +81,7 @@ object CorpusStats {
     // model, the grid, and the totals, so it is persisted (one
     // tokenization pass total) and released before returning; the
     // |groups|-row result is materialized eagerly
-    val gb = toks.groupBy("grp", "b").agg(count(lit(1)).as("cg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gb = scope.persist(toks.groupBy("grp", "b").agg(count(lit(1)).as("cg")))
     // corpus bucket counts derive from the group counts (Σ over
     // groups is exact — same exploded tokens)
     val cb = gb.groupBy("b").agg(sum("cg").as("cc"))
@@ -113,7 +113,6 @@ object CorpusStats {
           .as("kl_nats"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    gb.unpersist(blocking = false)
     out
     }
   }
@@ -145,18 +144,17 @@ object CorpusStats {
   def sourceOverlapMatrix(df: DataFrame, groupCol: String,
                           textCol: String, n: Int = 4): DataFrame = {
     if (n < 1) throw InvalidArgumentValue(s"n must be >= 1, got $n")
-    // scoped cached-plan AQE (see AdaptiveCache): the gram set and
-    // the pair matrix are dimension-bounded persists
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe): the gram
+    // set and the pair matrix are dimension-bounded persists
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
     // spreadSmallScan: the explode + partial-aggregated distinct
     // below otherwise runs in ONE task on a single-file corpus (the
     // wordGramRows rationale); the gate adds no exchange at scale
-    val grams = InputSpread.spreadSmallScan(
+    val grams = scope.persist(InputSpread.spreadSmallScan(
         df.select(col(groupCol).as("grp"), col(textCol).as("__txt")),
         "__txt")
       .select(col("grp"), explode(Dedup.shingles(col("__txt"), n)).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val sizes = grams.groupBy("grp").agg(count(lit(1)).as("n_grams"))
     val a = grams.as("a")
     val b = grams.as("b")
@@ -177,7 +175,6 @@ object CorpusStats {
           .as("containment"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    grams.unpersist(blocking = false)
     out
     }
   }

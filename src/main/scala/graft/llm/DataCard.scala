@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.operators.OperatorScope
+
 /** One-call corpus summary card — the "data card" a training-data
   * pipeline publishes alongside every corpus snapshot (what's in the
   * box: volume, sources, languages, duplication, length shape,
@@ -34,21 +36,20 @@ object DataCard {
                      langCol: String, sourceCol: String,
                      rules: TextAnalysis.QualityRules =
                        TextAnalysis.QualityRules()): DataFrame = {
-    // scoped cached-plan AQE (see AdaptiveCache): the card is a union
-    // of six dimension-sized sections over a persisted narrow base;
-    // without the scope its materialization fans every section's
-    // exchange to cores-proportional width (measured r14: q134 752
-    // tasks → 66, q135 1401 → 122, walls 0.92×/0.91×)
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
-    val base = df.select(col(idCol).cast("long").as("id"),
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe): the card
+    // is a union of six dimension-sized sections over a persisted
+    // narrow base; without the scope its materialization fans every
+    // section's exchange to cores-proportional width (measured r14:
+    // q134 752 tasks → 66, q135 1401 → 122, walls 0.92×/0.91×)
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
+    val base = scope.persist(df.select(col(idCol).cast("long").as("id"),
         col(textCol).as("text"),
         col(langCol).cast("string").as("lang"),
         col(sourceCol).cast("string").as("source"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .withColumn("n_toks",
         size(filter(split(trim(lower(col("text"))), "\\s+"),
-          x => x =!= "")).cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          x => x =!= "")).cast("long")))
 
     val global = base
       .agg(count(lit(1)).as("n_docs"),
@@ -96,9 +97,12 @@ object DataCard {
         .as(Seq("metric", "value")))
       .select(lit("source").as("section"), col("metric"), col("value"))
 
-    val lenRaw = graft.operators.Quantiles
+    // the quantile frame's blocks are pinned only until the card has
+    // them cached, so the card call leaves exactly one persisted frame
+    // behind (the card itself)
+    val lenRaw = scope.adopt(graft.operators.Quantiles
       .exactQuantiles(base, Nil, "n_chars", Seq(0.5, 0.9, 0.99),
-        persistResult = true)
+        persistResult = true))
     val lenQ = lenRaw
       .select(lit("length").as("section"),
         when(col("p") === 0.5, "p50")
@@ -116,11 +120,6 @@ object DataCard {
       .orderBy("section", "metric")
       .persist(StorageLevel.MEMORY_AND_DISK)
     card.count()
-    // the quantile frame's persisted blocks are pinned only until the
-    // card has them cached; release synchronously so a card call
-    // leaves exactly one persisted frame behind (the card itself)
-    lenRaw.unpersist(blocking = true)
-    base.unpersist(blocking = false)
     card
     }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.exceptions._
+import graft.operators.OperatorScope
 
 /** Document deduplication operators for training-data pipelines.
   *
@@ -89,30 +90,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Eager, TRACKED lineage cut (the dupClusters pattern): returns
-    * the checkpointed frame plus the RDD blocks backing it, for
-    * explicit release once the caller's result is materialized.
-    *
-    * Why the dedup funnels need it: a persisted frame's plan is
-    * re-printed IN FULL at every reference (InMemoryRelation renders
-    * its cached child), so a funnel whose caches NEST — candidates
-    * cached over signatures cached over shingles cached over a
-    * complex input — renders an explain tree that grows
-    * multiplicatively with nesting depth, and AQE builds that string
-    * on every stage update for the UI event. Measured: the
-    * within-batch ingest composition (probe + funnel under
-    * foreachBatch) OOM'd an 8 GB driver heap on a ~100-doc batch
-    * purely in `explainString`, and stayed minutes-slow per batch
-    * with the string capped because the tree WALK is O(printed
-    * nodes). A localCheckpoint leaf (LogicalRDD) prints in O(1).
-    * Planner stats are erased by the cut, which is harmless here:
-    * every downstream join strategy in these funnels is chosen
-    * explicitly from measured counts.
-    */
-  private def checkpointTracked(df: DataFrame)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-    graft.operators.Lineage.checkpointTracked(df)
-
   /** One (id, 64-bit shingle hash) row per sliding-window OCCURRENCE —
     * deliberately NOT deduped (round-12): minhash MIN aggregates are
     * idempotent under duplicates, so the signature path never needed
@@ -147,20 +124,6 @@ object Dedup {
       .select(col("id"),
         xxhash64(expr(s"substring(txt, i, $shingleK)")).as("s"))
 
-  /** ObjectHashAggregate's Spark-default sort fallback engages at 128
-    * keys/partition — far below any shingle corpus — so raise it
-    * unless the user pinned it; signature buffers are ~8·numHashes
-    * bytes, so the 256k ceiling is ~256 MB/partition worst case.
-    */
-  private def raiseObjectAggThreshold(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    if (spark.conf.getOption(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-        .forall(_ == "128"))
-      spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "262144")
-
   /** One-permutation signatures (`minhash_oph_sigs`): numHashes
     * high-bit buckets over ONE hash per shingle occurrence, min per
     * bucket, rotation densification — one bucket update per row in
@@ -170,13 +133,13 @@ object Dedup {
     * family's, but every surviving pair is still exact-verified, so
     * the returned pair set agrees wherever both families' LSH recall
     * is 1 (LlmSpec pins oph == affine == exact on the spec corpus;
-    * q142 pins it against the DuckDB brute-force oracle).
+    * q142 pins it against the DuckDB brute-force oracle). Run it
+    * inside a scope holding `OperatorScope.ObjectAggThreshold`.
     */
   private def ophSignaturesOf(shingleRows: DataFrame, numHashes: Int,
                               seed: Long): DataFrame = {
     val spark = shingleRows.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    raiseObjectAggThreshold(spark)
     shingleRows.groupBy("id")
       .agg(call_function("minhash_oph_sigs", col("s"),
         lit(numHashes.toLong), lit(seed)).as("ms"))
@@ -191,13 +154,13 @@ object Dedup {
     * and −15/−20% at 50k against the 128-MIN-expression formulation,
     * both orders, identical shuffle (SCALING.md round-13). The row
     * hash `h` keeps Spark's `pmod` (one per ROW, and its
-    * signed-negative semantics differ from an unsigned fold).
+    * signed-negative semantics differ from an unsigned fold). Run it
+    * inside a scope holding `OperatorScope.ObjectAggThreshold`.
     */
   private def signaturesOf(shingleRows: DataFrame, numHashes: Int,
                            seed: Long): DataFrame = {
     val spark = shingleRows.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    raiseObjectAggThreshold(spark)
     val params = hashParams(numHashes, seed)
     shingleRows.withColumn("h", pmod(col("s"), lit(P)))
       .groupBy("id")
@@ -350,20 +313,18 @@ object Dedup {
       throw InvalidArgumentValue(
         s"sigFamily must be 'affine' or 'oph', got '$sigFamily'")
 
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession,
-        minPartitionSize = Some("64KB")) {
+    OperatorScope(df.sparkSession, OperatorScope.Minhash) { scope =>
     // persisted: signatures and the exact-verify both read it
-    val shingleRows = shingleHashRows(df, idCol, textCol, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shingleRows =
+      scope.persist(shingleHashRows(df, idCol, textCol, shingleK))
 
     // persisted COLUMNAR: sig is the funnel's scan-hot frame — the
     // band projection reads it twice and the 128-column estimate
     // joins twice more (a lineage-cut checkpoint was tried here and
     // measured ~3× slower per scan: row blocks vs columnar batches)
-    val sig = (if (sigFamily == "oph")
-        ophSignaturesOf(shingleRows, numHashes, seed)
+    val sig = scope.persist(
+      if (sigFamily == "oph") ophSignaturesOf(shingleRows, numHashes, seed)
       else signaturesOf(shingleRows, numHashes, seed))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Map-side sketch cut on the PAIR-BAND exchange (round-13): the
     // per-job costs at 500k open-vocab docs put ~85% of q31's
@@ -434,7 +395,6 @@ object Dedup {
     // one row per (pair, matching band); both enumeration modes feed
     // the same band-agreement count below
     var guardReport: () => Unit = () => ()
-    var sizedCache: Option[DataFrame] = None
     val pairBands =
       if (maxBandBucket <= 0)
         banded.as("x")
@@ -459,12 +419,10 @@ object Dedup {
         // corpus-proportional side.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("band", "bh")
-        val sized = banded
+        val sized = scope.persist(banded
           .withColumn("bsz", count(lit(1)).over(w))
-          .withColumn("mn", min("id").over(w))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("mn", min("id").over(w)))
         sized.count()
-        sizedCache = Some(sized)
         val small = sized.filter(col("bsz") <= maxBandBucket)
           .select(("id" +: "band" +: "bh" +: skCols).map(col): _*)
         val allPairs = small.as("x")
@@ -518,19 +476,14 @@ object Dedup {
     // to candidate ids is a pure plan change.
     val estSemiKnee = df.sparkSession.conf
       .get("graft.dedup.estimateSemiJoinMinCorpus", "20000").toLong
-    var estRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-    var sigCandCache: Option[DataFrame] = None
     val (estCandidates, estSig) =
       if (estSemiKnee > 0 && nDocs < estSemiKnee) (candidates, sig)
       else {
-        val (candCk, rdds) = checkpointTracked(candidates)
-        estRdds = rdds
+        val candCk = scope.checkpoint(candidates)
         val ids = candCk.select(col("id_a").as("id"))
           .union(candCk.select(col("id_b").as("id"))).distinct()
-        val sigCand = sig.join(ids, Seq("id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sigCand = scope.persist(sig.join(ids, Seq("id"), "left_semi"))
         sigCand.count()
-        sigCandCache = Some(sigCand)
         (candCk, sigCand)
       }
     val aSide = estSig.select(
@@ -553,12 +506,11 @@ object Dedup {
     // agreement aggregate + two 128-column estimate joins) — measured
     // as a q31/q57 bench regression when the candidate-pruned verify
     // first landed referencing it twice more.
-    val strong = estCandidates
+    val strong = scope.persist(estCandidates
       .join(aSide, "id_a")
       .join(bSide, "id_b")
       .filter(estMatches.cast("double") / numHashes >= threshold - slack)
-      .select("id_a", "id_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b"))
 
     // exact verification, join-based: |A ∩ B| is a count over the
     // DISTINCT shingle rows of both candidate sides,
@@ -574,10 +526,9 @@ object Dedup {
     // on docs that were never candidates.
     val candIds = strong.select(col("id_a").as("id"))
       .union(strong.select(col("id_b").as("id"))).distinct()
-    val candShingles = shingleRows
+    val candShingles = scope.persist(shingleRows
       .join(candIds, Seq("id"), "left_semi")
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val sizes = candShingles.groupBy("id").agg(count(lit(1)).as("n"))
     val inter = strong
       .join(candShingles.select(col("id").as("id_a"), col("s")), "id_a")
@@ -593,18 +544,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the (tiny) pair result, then release the funnel's
-    // intermediates — a library caller looping over corpora would
-    // otherwise accumulate cached frames per call forever
     result.count()
     guardReport()
-    shingleRows.unpersist(blocking = false)
-    strong.unpersist(blocking = false)
-    candShingles.unpersist(blocking = false)
-    sizedCache.foreach(_.unpersist(blocking = false))
-    sigCandCache.foreach(_.unpersist(blocking = false))
-    estRdds.foreach(_.unpersist(blocking = false))
-    sig.unpersist(blocking = false)
     result
     }
   }
@@ -626,12 +567,14 @@ object Dedup {
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                         path: String, shingleK: Int = 4,
                         numHashes: Int = 128, seed: Long = 42L): Unit = {
-    signaturesOf(shingleHashRows(df, idCol, textCol, shingleK),
-      numHashes, seed)
-      .withColumn("batch", lit(BaseBatchTag))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("batch").parquet(path)
+    OperatorScope(df.sparkSession, Seq(OperatorScope.ObjectAggThreshold)) { _ =>
+      signaturesOf(shingleHashRows(df, idCol, textCol, shingleK),
+        numHashes, seed)
+        .withColumn("batch", lit(BaseBatchTag))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("batch").parquet(path)
+    }
     writeIndexMeta(df.sparkSession, path, shingleK, numHashes, seed)
   }
 
@@ -665,12 +608,14 @@ object Dedup {
     // non-atomic window (crash between delete and write) is repaired by
     // re-running the append — the operation stays idempotent.
     deleteTagPartition(df.sparkSession, path, batchTag)
-    signaturesOf(shingleHashRows(df, idCol, textCol, shingleK),
-      numHashes, seed)
-      .withColumn("batch", lit(batchTag))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(path)
+    OperatorScope(df.sparkSession, Seq(OperatorScope.ObjectAggThreshold)) { _ =>
+      signaturesOf(shingleHashRows(df, idCol, textCol, shingleK),
+        numHashes, seed)
+        .withColumn("batch", lit(batchTag))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch").parquet(path)
+    }
   }
 
   /** Shared batch-tag validation for index appends. */
@@ -828,19 +773,16 @@ object Dedup {
     val idxSig = idxScoped.select(
       col("id") +: (0 until numHashes).map(i => col(s"m$i")): _*)
 
-    graft.operators.AdaptiveCache.withCoalescedCaches(spark,
-        minPartitionSize = Some("64KB")) {
+    OperatorScope(spark, OperatorScope.Minhash) { scope =>
     // batch-side set semantics restored at batch scale (the ingest
     // contract bounds it); the corpus side below dedups POST-prune
-    val newShingles = shingleHashRows(newDf, idCol, textCol, shingleK)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newShingles = scope.persist(
+      shingleHashRows(newDf, idCol, textCol, shingleK).distinct())
     // persisted COLUMNAR (the minhashNearDups sig rationale): the
     // 128-column signature frame is scan-hot (banding + the estimate
     // join), so it keeps the fast columnar cache; the probe's
     // explain-nesting cut lives in the narrow `candidates` below
-    val newSig = signaturesOf(newShingles, numHashes, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newSig = scope.persist(signaturesOf(newShingles, numHashes, seed))
 
     // Every static broadcast in the probe is DATA-DEPENDENT — the
     // batch by the ingest contract, candidates by band matches — and
@@ -893,7 +835,11 @@ object Dedup {
         byteMatches(col(s"x.sk$j"), col(s"y.sk$j"))).reduce(_ + _) >=
         lit(pCutBytes)
     val newBanded = bandedOf(newSig, numHashes, bands, pSkLongs)
-    val (candidates, candRdds) = checkpointTracked(
+    // Lineage cut, not persist: nested caches re-print their plans at
+    // every reference (measured: probe + funnel under foreachBatch
+    // OOM'd an 8 GB driver heap in `explainString`); the stats the cut
+    // erases are unused, every join below is chosen from counts.
+    val candidates = scope.checkpoint(
       bandedOf(idxSig, numHashes, bands, pSkLongs).as("x")
         .join((if (batchSafe) broadcast(newBanded) else newBanded).as("y"),
           col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -936,7 +882,7 @@ object Dedup {
     // broadcast statically for the same no-corpus-shuffle-write
     // reason as the band join above (candidates are bounded by the
     // batch's band matches, batch signatures by the batch itself)
-    val strong = bcastIfSafe(candidates)
+    val strong = scope.persist(bcastIfSafe(candidates)
       .join(aSide, "id_a")
       .join(bcastIfSafe(bSide), "id_b")
       .filter(estMatches.cast("double") / numHashes >= threshold - slack)
@@ -946,8 +892,7 @@ object Dedup {
       // and double-count `ix` below — i.e. emit a WRONG jaccard rather
       // than an error; distinct on this O(candidates) frame is cheap
       // insurance that the verify stays exact
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
     // exact verify: corpus text re-shingled ONLY for candidate docs.
     // candA broadcast statically — a shuffled semi join would write
@@ -959,10 +904,10 @@ object Dedup {
     // (round-12), so the set-semantics distinct the Jaccard needs now
     // shuffles only candidate docs' shingles — the old global distinct
     // paid a corpus-sized exchange before the prune could apply
-    val corpusShingles = shingleHashRows(corpus, idCol, textCol, shingleK)
-      .join(bcastIfSafe(candA), Seq("id"), "left_semi")
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpusShingles = scope.persist(
+      shingleHashRows(corpus, idCol, textCol, shingleK)
+        .join(bcastIfSafe(candA), Seq("id"), "left_semi")
+        .distinct())
     val sizesA = corpusShingles.groupBy("id").agg(count(lit(1)).as("na"))
     val sizesB = newShingles.groupBy("id").agg(count(lit(1)).as("nb"))
     val inter = strong
@@ -979,15 +924,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the (tiny) pair result, then release the probe's
-    // intermediates — a per-micro-batch caller (dedupIngestStream)
-    // would otherwise accumulate four cached frames per batch forever
     result.count()
-    newShingles.unpersist(blocking = false)
-    newSig.unpersist(blocking = false)
-    candRdds.foreach(_.unpersist(blocking = false))
-    strong.unpersist(blocking = false)
-    corpusShingles.unpersist(blocking = false)
     result
     }
   }
@@ -1132,28 +1069,25 @@ object Dedup {
     if (n <= 0)
       throw InvalidArgumentValue(s"n must be positive, got $n")
 
+    OperatorScope(df.sparkSession) { scope =>
     // persisted: frequency count, ranking, and exact verify all read it
-    val grams = wordGramRows(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = scope.persist(wordGramRows(df, idCol, textCol, n))
 
     val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
     val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    try gramSaturationGuard(freq, n, "ngramJaccardNearDups",
+    gramSaturationGuard(freq, n, "ngramJaccardNearDups",
       saturationMode, minDistinctGramRatio)
-    catch { case e: graft.GraftException =>
-      grams.unpersist(blocking = false); throw e }
 
     // rarest-first total order; row_number is one shuffle+sort per doc
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("df").asc, col("g").asc)
-    val prefix = grams
+    val prefix = scope.persist(grams
       .join(freq, "g")
       .withColumn("rn", row_number().over(rankW))
       .join(sizes, "id")
       .filter(col("rn") <=
         col("sz") - ceil(col("sz") * lit(threshold) - lit(1e-9)) + 1)
-      .select(col("id"), col("g"), col("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("g"), col("sz")))
 
     // Join strategies come from REAL sizes, not estimates: both
     // caches are materialized before anything downstream is planned
@@ -1194,9 +1128,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     result.count()
-    grams.unpersist(blocking = false)
-    prefix.unpersist(blocking = false)
     result
+    }
   }
 
   /** EXACT n-gram containment join — the DIRECTIONAL complement of
@@ -1234,24 +1167,21 @@ object Dedup {
         s"threshold must be in (0, 1], got $threshold")
     if (n <= 0)
       throw InvalidArgumentValue(s"n must be positive, got $n")
-    val grams = wordGramRows(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OperatorScope(df.sparkSession) { scope =>
+    val grams = scope.persist(wordGramRows(df, idCol, textCol, n))
     val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
     val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    try gramSaturationGuard(freq, n, "ngramContainmentJoin",
+    gramSaturationGuard(freq, n, "ngramContainmentJoin",
       saturationMode, minDistinctGramRatio)
-    catch { case e: graft.GraftException =>
-      grams.unpersist(blocking = false); throw e }
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("df").asc, col("g").asc)
-    val prefix = grams
+    val prefix = scope.persist(grams
       .join(freq, "g")
       .withColumn("rn", row_number().over(rankW))
       .join(sizes, "id")
       .filter(col("rn") <=
         col("sz") - ceil(col("sz") * lit(threshold) - lit(1e-9)) + 1)
-      .select(col("id"), col("g"), col("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("g"), col("sz")))
     // real stats before planning (the ngramJaccardNearDups
     // rationale): grams filled by the guard's pass, prefix by this
     // count — the planner never broadcasts a corpus-proportional
@@ -1279,9 +1209,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("containment"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     result.count()
-    grams.unpersist(blocking = false)
-    prefix.unpersist(blocking = false)
     result
+    }
   }
 
   /** Connected components over a near-duplicate pair list: the step
@@ -1355,12 +1284,11 @@ object Dedup {
     // persisted, materialized pairs), the projection is a cheap cache
     // scan and a second persist would only duplicate blocks — skip it.
     // Released before return on every path (only if taken here).
-    val ownPersist =
-      pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    OperatorScope(pairs.sparkSession) { scope =>
     val proj0 = pairs.select(col(idA).as("src"), col(idB).as("dst"))
     val proj =
-      if (ownPersist)
-        proj0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        scope.persist(proj0)
       else proj0
     // one priming aggregate: total edges (the fast-path gate) + the
     // non-null counts. NULL ids are rejected in BOTH paths: the
@@ -1371,46 +1299,40 @@ object Dedup {
     val gate = proj.select(count(lit(1)).as("n"),
       count(col("src")).as("na"), count(col("dst")).as("nb")).head()
     val (nEdges, nA, nB) = (gate.getLong(0), gate.getLong(1), gate.getLong(2))
-    if (nA != nEdges || nB != nEdges) {
-      if (ownPersist) proj.unpersist(blocking = false)
+    if (nA != nEdges || nB != nEdges)
       throw InvalidArgumentValue(
         s"dupClusters: pair list has NULL ids (${nEdges - math.min(nA, nB)}" +
           s" of $nEdges rows) — near-dup pairs must carry non-null ids")
+    val cap = pairs.sparkSession.conf
+      .get("graft.dedup.maxDriverEdges", "2000000").toLong
+    val idTypes = Seq(idA, idB).map(c => pairs.schema(c).dataType)
+    val integral = idTypes.forall(t =>
+      t == org.apache.spark.sql.types.LongType ||
+        t == org.apache.spark.sql.types.IntegerType ||
+        t == org.apache.spark.sql.types.ShortType ||
+        t == org.apache.spark.sql.types.ByteType)
+    if (cap > 0 && integral && nEdges <= cap)
+      dupClustersLocal(proj, idTypes.head, nEdges)
+    else dupClustersDistributed(scope, proj, nEdges, maxIter)
     }
-    locally {
-      val spark = pairs.sparkSession
-      val cap = spark.conf
-        .get("graft.dedup.maxDriverEdges", "2000000").toLong
-      val idTypes = Seq(idA, idB).map(c => pairs.schema(c).dataType)
-      val integral = idTypes.forall(t =>
-        t == org.apache.spark.sql.types.LongType ||
-          t == org.apache.spark.sql.types.IntegerType ||
-          t == org.apache.spark.sql.types.ShortType ||
-          t == org.apache.spark.sql.types.ByteType)
-      if (cap > 0 && integral && nEdges <= cap)
-        try return dupClustersLocal(proj, idTypes.head, nEdges)
-        finally if (ownPersist) proj.unpersist(blocking = false)
-    }
+  }
+
+  /** [[dupClusters]]' distributed rounds; `scope` holds every round's
+    * checkpoint and hands the final mapping to the caller. */
+  private def dupClustersDistributed(scope: OperatorScope, proj: DataFrame,
+                                     nEdges: Long, maxIter: Int): DataFrame = {
     val edges = proj
       .union(proj.select(col("dst").as("src"), col("src").as("dst")))
     // each round MUST truncate lineage (eager localCheckpoint): the
     // round-N plan embeds round-N−1's plan several times, so without
     // truncation the logical plan grows ~2^N nodes and the DRIVER
     // OOMs during analysis after ~15 rounds — persist caches data but
-    // does not shrink the plan. localCheckpoint blocks live OUTSIDE
-    // the CacheManager (Dataset.unpersist/clearCache can't free
-    // them), so each round's checkpoint RDDs are taken from the
-    // checkpointed frame itself (graft.operators.Lineage — never a
-    // getPersistentRDDs diff, which under a concurrent driver
-    // captures OTHER queries' blocks) and explicitly unpersisted as
-    // soon as they are superseded — only the final round's blocks
-    // (backing the returned frame) remain, freed by ContextCleaner
-    // when the frame is GC'd.
+    // does not shrink the plan. Each round's checkpoint is released
+    // by the scope as soon as it is superseded — only the final
+    // round's mapping blocks (backing the returned frame) remain,
+    // freed by ContextCleaner when the frame is GC'd.
     // edges is an (already materialized) proj cache scan + its swap —
     // per round that costs two cache reads, never the pair pipeline
-    def checkpointTracked(df: DataFrame)
-        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-      graft.operators.Lineage.checkpointTracked(df)
     // STAR CONTRACTION (round-11 rewrite). The previous loop kept the
     // ORIGINAL edge set and propagated min labels with a root-of-root
     // jump; that is O(diameter), not O(log): on a filament whose
@@ -1429,10 +1351,10 @@ object Dedup {
     // The composed mapping is maintained for ALL original nodes and
     // converges to the same component-min fixpoint as the driver
     // union-find (LlmSpec pins equality).
-    var (mapping, mapRdds) = checkpointTracked(
+    var mapping = scope.checkpoint(
       edges.select(col("src").as("id")).distinct()
         .withColumn("root", col("id")))
-    var (live, liveRdds) = checkpointTracked(edges.distinct())
+    var live = scope.checkpoint(edges.distinct())
     var nLive = nEdges // upper bound; refreshed each round
     // auto round budget (maxIter = 0): contraction needs O(log d) ≤
     // O(log n) rounds, so size it from the edge count the gate
@@ -1477,7 +1399,7 @@ object Dedup {
           coalesce(col("rroot"), col("a.root")).as("root"))
       // contract: rewrite every live edge to its endpoints' new
       // roots; intra-star edges become self-loops and vanish
-      val (nextLive, nextLiveRdds) = checkpointTracked(live
+      val nextLive = scope.checkpoint(live
         .join(roots.select(col("id").as("src"), col("root").as("nsrc")),
           "src")
         .join(roots.select(col("id").as("dst"), col("root").as("ndst")),
@@ -1488,15 +1410,15 @@ object Dedup {
       // compose the global mapping: any original node whose current
       // root was relabeled this round follows it; roots that left the
       // live node set are final and pass through
-      val (nextMapping, nextMapRdds) = checkpointTracked(mapping
+      val nextMapping = scope.checkpoint(mapping
         .join(roots.select(col("id").as("root"), col("root").as("nr")),
           Seq("root"), "left")
         .select(col("id"), coalesce(col("nr"), col("root")).as("root")))
       nLive = nextLive.count()
-      liveRdds.foreach(_.unpersist(blocking = false))
-      mapRdds.foreach(_.unpersist(blocking = false))
-      live = nextLive; liveRdds = nextLiveRdds
-      mapping = nextMapping; mapRdds = nextMapRdds
+      scope.release(live)
+      scope.release(mapping)
+      live = nextLive
+      mapping = nextMapping
       iter += 1
       // one line per round: the convergence curve is the ONLY way to
       // distinguish "needs a few more rounds" from "a structure the
@@ -1504,18 +1426,14 @@ object Dedup {
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"dupClusters round $iter: $nLive live contracted edges")
     }
-    if (ownPersist) proj.unpersist(blocking = false)
-    liveRdds.foreach(_.unpersist(blocking = false))
     // wrong labels are worse than no labels: a component the budget
     // could not finish would silently keep several roots and
     // under-dedup downstream
-    if (nLive > 0) {
-      mapRdds.foreach(_.unpersist(blocking = false))
+    if (nLive > 0)
       throw InvalidArgumentValue(
         s"dupClusters did not converge in $roundBudget rounds " +
           s"($nLive edges still live) — raise maxIter " +
           "(0 = auto budget of max(20, log2(2E)+8) rounds)")
-    }
     // the converged roots are hash-argmin representatives — one per
     // component but arbitrary-VALUED; relabel to the component MIN id
     // (the driver union-find contract, and what keep-one dedup keys
@@ -1523,7 +1441,7 @@ object Dedup {
     // — trivial next to the edge rounds above — and it reads the
     // final round's checkpoint blocks, so the @note on block lifetime
     // holds unchanged.
-    mapping
+    scope.keep(mapping)
       .join(mapping.groupBy("root").agg(min(col("id")).as("__mn")),
         "root")
       .select(col("id"), col("__mn").as("root"))
@@ -1816,14 +1734,13 @@ object Dedup {
       if (m < 2) throw InvalidArgumentValue(
         s"maxDocFreq must be >= 2, got $m")
     }
-    // scoped cached-plan AQE (see AdaptiveCache): the winnow pair
-    // path persists fps / freq / result — dimension-to-candidate
-    // sized frames whose exchanges otherwise run cores-wide
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe): the
+    // winnow pair path persists fps / freq / result — dimension-to-
+    // candidate sized frames whose exchanges otherwise run cores-wide
     // (measured r14: q130 1106 tasks → 111, wall 0.66×)
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
-    val fps = winnowFingerprints(df, idCol, textCol, k, w)
-      .select(col("id"), col("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
+    val fps = scope.persist(winnowFingerprints(df, idCol, textCol, k, w)
+      .select(col("id"), col("fp")).distinct())
     // ONE priming action materializes the kernel (needed anyway so
     // join strategies come from measured sizes, not planner
     // estimates — the q31 1 GB-broadcast lesson) and, with the guard
@@ -1836,29 +1753,27 @@ object Dedup {
     // q130's jobs) are skipped with bit-identical output; (b) when
     // the guard does engage, the lazy plan reuses the persisted freq
     // table instead of re-aggregating it.
-    val (lazyOut, freqOpt) = maxDocFreq match {
+    val lazyOut = maxDocFreq match {
       case Some(m) =>
-        val freq = fps.groupBy("fp").agg(count(lit(1)).as("__df"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val freq =
+          scope.persist(fps.groupBy("fp").agg(count(lit(1)).as("__df")))
         val head = freq.agg(sum("__df").as("rows"), max("__df").as("mx"))
           .head()
         val nRows = if (head.isNullAt(0)) 0L else head.getLong(0)
         val maxDf = if (head.isNullAt(1)) 0L else head.getLong(1)
         if (maxDf <= m)
-          (winnowOverlapLazy(fps, minShared, minContainment, None,
-            fpsRows = Some(nRows)), Some(freq))
+          winnowOverlapLazy(fps, minShared, minContainment, None,
+            fpsRows = Some(nRows))
         else
-          (winnowOverlapLazy(fps, minShared, minContainment, Some(m),
-            fpsRows = Some(nRows), freqTable = Some(freq)), Some(freq))
+          winnowOverlapLazy(fps, minShared, minContainment, Some(m),
+            fpsRows = Some(nRows), freqTable = Some(freq))
       case None =>
-        (winnowOverlapLazy(fps, minShared, minContainment, None,
-          fpsRows = Some(fps.count())), None)
+        winnowOverlapLazy(fps, minShared, minContainment, None,
+          fpsRows = Some(fps.count()))
     }
     val out = lazyOut
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    freqOpt.foreach(_.unpersist(blocking = false))
-    fps.unpersist(blocking = false)
     out
     }
   }
@@ -1982,14 +1897,14 @@ object Dedup {
                           k: Int = 4, w: Int = 8, minShared: Int = 3,
                           minContainment: Double = 0.8,
                           maxDocFreq: Int = 1000): DataFrame = {
-    val pairs = winnowNearDups(df, idCol, textCol, k, w, minShared,
-      minContainment, maxDocFreq)
-    // dupClusters (inside dedupNearDups) is iterative and eager, so
-    // pairs is fully consumed once this returns; the surviving frame
-    // references only the checkpointed labels
-    val out = dedupNearDups(df, idCol, pairs)
-    pairs.unpersist(blocking = false)
-    out
+    OperatorScope(df.sparkSession) { scope =>
+      val pairs = scope.adopt(winnowNearDups(df, idCol, textCol, k, w,
+        minShared, minContainment, maxDocFreq))
+      // dupClusters (inside dedupNearDups) is iterative and eager, so
+      // pairs is fully consumed once this returns; the surviving frame
+      // references only the checkpointed labels
+      dedupNearDups(df, idCol, pairs)
+    }
   }
 
   /** Cross-corpus n-gram NOVELTY: per scored document, the fraction
@@ -2090,11 +2005,9 @@ object Dedup {
     // batch-bounded gram projection computing up to three times
     // inside the one downstream action, which is the right trade when
     // the batch ≪ the reference
+    OperatorScope(spark) { scope =>
     val grams0 = wordGramRows(df, idCol, textCol, n)
-    val grams =
-      if (materialize)
-        grams0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else grams0
+    val grams = if (materialize) scope.persist(grams0) else grams0
     val safe = grams.count() <= bcastCap
     if (!safe)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -2118,8 +2031,8 @@ object Dedup {
       val r = res
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       r.count()
-      grams.unpersist(blocking = false)
       r
+    }
     }
   }
 
@@ -2134,11 +2047,11 @@ object Dedup {
       if (fpp <= 0 || fpp >= 1)
         throw InvalidArgumentValue(s"bloomFpp must be in (0,1), got $fpp")
     }
+    OperatorScope(corpus.sparkSession) { scope =>
     val cGrams = wordGramRows(corpus, corpusId, corpusText, n)
     val eGrams = wordGramRows(eval, evalId, evalText, n)
       .withColumnRenamed("id", "eid")
     val sizes = cGrams.groupBy("id").agg(count(lit(1)).as("n_grams"))
-    var bloomB: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     val cSide = bloomFpp match {
       case Some(fpp) =>
         // the count is one cheap job over the (tiny by contract) eval
@@ -2146,18 +2059,14 @@ object Dedup {
         // treeAggregate — only the final bitset hits the driver. The
         // gram frame is persisted across the two EAGER build jobs
         // (count + aggregate) so its distinct-shuffle runs once, and
-        // released before returning (the lazy join recomputes it at
+        // released right after (the lazy join recomputes it at
         // action time — cache-hygiene contract: nothing persisted
         // outlives the call)
-        val hashes = eGrams.select("g")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bf =
-          try {
-            val nE = math.max(hashes.count(), 1L)
-            hashes.stat.bloomFilter("g", nE, fpp)
-          } finally hashes.unpersist()
-        val bfB = corpus.sparkSession.sparkContext.broadcast(bf)
-        bloomB = Some(bfB)
+        val hashes = scope.persist(eGrams.select("g"))
+        val nE = math.max(hashes.count(), 1L)
+        val bf = hashes.stat.bloomFilter("g", nE, fpp)
+        scope.release(hashes)
+        val bfB = scope.broadcast(corpus.sparkSession, bf)
         // mightContainLong is the one non-codegen step in the module's
         // dedup family — a deliberate trade: a broadcast bitmap probe
         // per gram row versus shuffling the full corpus gram mass
@@ -2173,20 +2082,16 @@ object Dedup {
       .select(col("id"), col("n_shared_grams"), col("n_eval_docs"),
         (col("n_shared_grams").cast("double") /
           col("n_grams").cast("double")).as("contamination_frac"))
-    bloomB match {
-      case Some(bfB) =>
-        // the Bloom broadcast is one-shot: materialize the (small —
-        // contaminated docs only) result, persist it, and free the
-        // executor copies so repeated calls in a long-lived session
-        // don't accumulate broadcast memory. unpersist, not destroy —
-        // a recompute after executor loss re-sends from the driver
-        // instead of failing. `.unpersist()` the result when done.
-        val out = res.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        bfB.unpersist(blocking = false)
-        out
-      case None => res
+    if (bloomFpp.isEmpty) res
+    else {
+      // the Bloom broadcast is one-shot: the (small — contaminated
+      // docs only) result is persisted so the scope can free the
+      // executor copies. `.unpersist()` the result when done.
+      val out = res.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      out
+    }
     }
   }
 
@@ -2563,14 +2468,12 @@ object Dedup {
       }: _*)).as("c"))
       .select(col("id"), col("sig"),
         col("c.ci").as("ci"), col("c.cv").as("cv"))
-    var cache: DataFrame = null
-
+    OperatorScope(df.sparkSession) { scope =>
     def hammingOf(a: Column, b: Column): Column =
       bit_count(a.bitwiseXOR(b)).cast("long")
     val candidates =
       if (maxChunkBucket <= 0) {
-        cache = chunked
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val cache = scope.persist(chunked)
         cache.as("x")
           .join(cache.as("y"),
             col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
@@ -2588,12 +2491,10 @@ object Dedup {
         // stats before it is planned
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("ci", "cv")
-        val sized = chunked
+        val sized = scope.persist(chunked
           .withColumn("bsz", count(lit(1)).over(w))
-          .withColumn("mn", min(struct(col("id"), col("sig"))).over(w))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("mn", min(struct(col("id"), col("sig"))).over(w)))
         sized.count()
-        cache = sized
         val small = sized.filter(col("bsz") <= maxChunkBucket)
           .select("id", "sig", "ci", "cv")
         val allPairs = small.as("x")
@@ -2616,12 +2517,10 @@ object Dedup {
       .filter(col("hamming") <= maxHamming) // BEFORE the distinct's shuffle
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the chunk/window cache (see
-    // minhashNearDups)
     result.count()
     guardReport()
-    if (cache != null) cache.unpersist(blocking = false)
     result
+    }
   }
 
   private val guardObsSeq = new java.util.concurrent.atomic.AtomicLong()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.exceptions._
+import graft.operators.OperatorScope
 
 /** Data-selection operators for training-data pipelines: hashed
   * n-gram importance resampling (DSIR, Xie et al. 2023, "Data
@@ -106,12 +107,13 @@ object Selection {
                      numBuckets: Int = 10000,
                      smoothing: Double = 1.0): DataFrame = {
     checkArgs(numBuckets, smoothing)
-    // scoped cached-plan AQE (see AdaptiveCache): the gram-bucket
-    // cache and the per-doc weight result are the only persists —
-    // both shuffle-bounded by buckets/docs, never CPU-dense per byte
-    graft.operators.AdaptiveCache.withCoalescedCaches(raw.sparkSession) {
-    val rawGrams = gramBucketRows(raw, idCol, textCol, numBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe): the
+    // gram-bucket cache and the per-doc weight result are the only
+    // persists — both shuffle-bounded by buckets/docs, never
+    // CPU-dense per byte
+    OperatorScope(raw.sparkSession, OperatorScope.Coalesced) { scope =>
+    val rawGrams =
+      scope.persist(gramBucketRows(raw, idCol, textCol, numBuckets))
     val tgtCnt = gramBucketRows(target, idCol, textCol, numBuckets)
       .groupBy("b").agg(count(lit(1)).as("__ct"))
     // every scored bucket appears in the raw counts by construction
@@ -144,7 +146,6 @@ object Selection {
         sum(col("__c") * col("__lr")).as("log_w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    rawGrams.unpersist(blocking = false)
     out
     }
   }
@@ -176,16 +177,17 @@ object Selection {
                        numBuckets: Int = 10000,
                        smoothing: Double = 1.0): DataFrame = {
     if (n <= 0) throw InvalidArgumentValue(s"n must be positive, got $n")
-    val w = dsirLogWeights(raw, target, idCol, textCol, numBuckets,
-      smoothing)
-    val out = w.select(col("id"), col("log_w"),
-        (col("log_w") + gumbelKey(col("id"))).as("key"))
-      .orderBy(col("key").desc, col("id").asc)
-      .limit(n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    w.unpersist(blocking = false)
-    out
+    OperatorScope(raw.sparkSession) { scope =>
+      val w = scope.adopt(dsirLogWeights(raw, target, idCol, textCol,
+        numBuckets, smoothing))
+      val out = w.select(col("id"), col("log_w"),
+          (col("log_w") + gumbelKey(col("id"))).as("key"))
+        .orderBy(col("key").desc, col("id").asc)
+        .limit(n)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      out
+    }
   }
 
   /** DSIR selection, fraction form — the 100 TB path: compute the
@@ -205,23 +207,26 @@ object Selection {
                          smoothing: Double = 1.0): DataFrame = {
     if (frac.isNaN || frac <= 0 || frac >= 1)
       throw InvalidArgumentValue(s"frac must be in (0,1), got $frac")
-    val w = dsirLogWeights(raw, target, idCol, textCol, numBuckets,
-      smoothing)
-    // a narrow projection of the already-persisted weights — the
-    // quantile passes re-read w's cache, no second persist needed
-    val keyed = w.select(col("id"), col("log_w"),
-      (col("log_w") + gumbelKey(col("id"))).as("key"))
-    // empty in ⇒ empty out (there is no quantile of nothing — head()
-    // on the threshold row would throw)
-    if (w.count() == 0) { w.unpersist(blocking = false); return keyed }
-    val thr = graft.operators.Quantiles
-      .exactQuantiles(keyed, Seq.empty, "key", Seq(1.0 - frac))
-      .select(col("q")).head().getDouble(0)
-    val out = keyed.filter(col("key") >= lit(thr))
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .count()
-    w.unpersist(blocking = false)
-    out
+    OperatorScope(raw.sparkSession) { scope =>
+      val w = scope.adopt(dsirLogWeights(raw, target, idCol, textCol,
+        numBuckets, smoothing))
+      // a narrow projection of the already-persisted weights — the
+      // quantile passes re-read w's cache, no second persist needed
+      val keyed = w.select(col("id"), col("log_w"),
+        (col("log_w") + gumbelKey(col("id"))).as("key"))
+      // empty in ⇒ empty out (there is no quantile of nothing — head()
+      // on the threshold row would throw)
+      if (w.count() == 0) keyed
+      else {
+        val thr = graft.operators.Quantiles
+          .exactQuantiles(keyed, Seq.empty, "key", Seq(1.0 - frac))
+          .select(col("q")).head().getDouble(0)
+        val out = keyed.filter(col("key") >= lit(thr))
+        out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .count()
+        out
+      }
+    }
   }
 
   /** Temperature-based source sampling weights (Arivazhagan et al.

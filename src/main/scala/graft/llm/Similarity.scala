@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exceptions._
+import graft.operators.OperatorScope
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -438,10 +439,10 @@ object Similarity {
               kmeansIters: Int = 3): DataFrame = {
     if (nprobe > nlist)
       throw InvalidArgumentValue(s"nprobe ($nprobe) > nlist ($nlist)")
+    OperatorScope(corpus.sparkSession) { scope =>
     // persisted: every k-means iteration plus the final bucketing
     // re-reads the corpus vectors
-    val c = asDoubleVec(corpus, corpusId, vecCol, "cid", "cv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = scope.persist(asDoubleVec(corpus, corpusId, vecCol, "cid", "cv"))
     val q = asDoubleVec(queries, queryId, vecCol, "qid", "qv")
     requireSameDim(q, c)
     // the probe list is broadcast into the cell join — prove the
@@ -457,12 +458,9 @@ object Similarity {
       "qid", "cid")
     val result = topK(scored, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the (k·|queries|-row) result, then release the
-    // corpus vector cache — a caller looping over query batches would
-    // otherwise accumulate one cached corpus per call
     result.count()
-    c.unpersist(blocking = false)
     result
+    }
   }
 
   /** Materialize a reusable IVF index: cell assignments as parquet
@@ -478,8 +476,8 @@ object Similarity {
                     kmeansIters: Int = 3): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = asDoubleVec(corpus, corpusId, vecCol, "cid", "cv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OperatorScope(spark) { scope =>
+    val c = scope.persist(asDoubleVec(corpus, corpusId, vecCol, "cid", "cv"))
     val centroids = trainCentroids(c, nlist, kmeansIters)
     assignCells(c, centroids)
       .withColumn("batch", lit(BaseBatchTag))
@@ -496,7 +494,7 @@ object Similarity {
       .toDF("cell", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    c.unpersist(blocking = false)
+    }
   }
 
   private val BaseBatchTag = "base"
@@ -603,8 +601,8 @@ object Similarity {
     // driver at all (round-11; the q53 index's over-cap shuffled
     // fallback is the same pattern).
     val qCap = maxDriverQueries(spark)
-    val probes = probeCells(q, centroids, nprobe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    OperatorScope(spark) { scope =>
+    val probes = scope.persist(probeCells(q, centroids, nprobe))
     val nProbeRows = probes.count()
     // cap <= 0 means "no cap" everywhere in this module (the PQ path's
     // qCap0 > 0 guard, maxBandBucket's convention) — disabling the cap
@@ -635,11 +633,9 @@ object Similarity {
       "qid", "cid")
     val result = topK(scored, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the probe list — the per-batch caller
-    // pattern (one probe per arriving query batch) must not accumulate
     result.count()
-    probes.unpersist(blocking = false)
     result
+    }
   }
 
   /** Int8 scalar quantization of an embedding column: per-vector
@@ -873,10 +869,10 @@ object Similarity {
       throw InvalidArgumentValue(s"dim ($dim) not divisible by m ($m)")
     val subDim = dim / m
 
+    OperatorScope(spark) { scope =>
     // persisted: read by codebook training (iters passes), encoding,
     // and the exact re-rank join
-    val c = normalized(cRaw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = scope.persist(normalized(cRaw))
     val books = trainPqCodebooks(c, m, ncodes, kmeansIters)
 
     val encoded = c.as[(Long, Seq[Double])].mapPartitions { rows =>
@@ -900,7 +896,7 @@ object Similarity {
 
     // one broadcast instead of a per-task closure copy — the tables
     // grow with |queries|·m·ncodes
-    val tablesB = spark.sparkContext.broadcast(tables)
+    val tablesB = scope.broadcast(spark, tables)
     val adc = encoded.as[(Long, Seq[Int])].mapPartitions { rows =>
       rows.flatMap { case (cid, codes) =>
         val ca = codes.toArray
@@ -924,15 +920,9 @@ object Similarity {
     } else {
       sl.filter(col("rnk") <= k)
     }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the normalized-corpus cache (the
-    // looping-caller contract shared by ivfTopK/probeMinhashIndex)
-    // and the ADC broadcast — repeated calls in a long-lived session
-    // must not accumulate executor broadcast memory. unpersist, not
-    // destroy: a retried stage can still re-fetch from the driver.
     result.count()
-    c.unpersist(blocking = false)
-    tablesB.unpersist(blocking = false)
     result
+    }
   }
 
   /** Materialize an IVF-PQ index — the composition of the persisted
@@ -965,10 +955,10 @@ object Similarity {
         s"nlist, m, ncodes must be positive: $nlist, $m, $ncodes")
     val spark = corpus.sparkSession
     import spark.implicits._
+    OperatorScope(spark) { scope =>
     // persisted: centroid training, codebook training, and the final
     // encode pass all re-read the corpus vectors
-    val c = asDoubleVec(corpus, corpusId, vecCol, "cid", "cv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = scope.persist(asDoubleVec(corpus, corpusId, vecCol, "cid", "cv"))
     val dim = c.head(1).headOption
       .map(_.getSeq[Double](1).length)
       .getOrElse(throw InvalidArgumentValue("empty corpus"))
@@ -993,7 +983,7 @@ object Similarity {
       codes.zipWithIndex.map { case (cw, code) => (sub, code, cw.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/codebooks")
-    c.unpersist(blocking = false)
+    }
   }
 
   /** Shared IVF-PQ encode pass: nearest-cell assignment plus PQ codes
@@ -1160,6 +1150,7 @@ object Similarity {
     // LlmSpec pins over-cap == under-cap rows.
     val qCap0 = maxDriverQueries(spark)
     val nQ = if (qCap0 > 0) qRaw.count() else 0L
+    OperatorScope(spark) { scope =>
     if (qCap0 > 0 && nQ > qCap0) {
       // the one batch hashing cannot split: a single qid duplicated
       // past the cap lands whole in every chunk of every modulus.
@@ -1183,74 +1174,64 @@ object Similarity {
           s"hash-chunking into $nChunks probes")
       // the chunks re-read only this 2-column projection, never the
       // caller's upstream pipeline (which may be arbitrarily deep)
-      val qSlim = queries.select(col(queryId), col(vecCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qSlim = scope.persist(queries.select(col(queryId), col(vecCol)))
       val parts = (0 until nChunks).map { i =>
-        probeIvfPqIndexAt(path,
+        scope.adopt(probeIvfPqIndexAt(path,
           qSlim.filter(
             pmod(xxhash64(lit(depth), col(queryId)), lit(nChunks)) === i),
-          queryId, vecCol, k, nprobe, shortlist, depth + 1)
+          queryId, vecCol, k, nprobe, shortlist, depth + 1))
       }
       val result = parts.reduce(_ unionByName _)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       result.count()
-      parts.foreach(_.unpersist(blocking = false))
-      qSlim.unpersist(blocking = false)
-      return result
+      result
+    } else {
+      val probes = scope.persist(probeCells(qRaw, centroids, nprobe))
+      val wanted = probes.select("cell").distinct()
+        .collect().map(_.getInt(0)).sorted
+      val cells = spark.read.parquet(s"$path/cells")
+        .filter(col("cell").isin(wanted.toSeq: _*))
+
+      // per-query ADC tables from the NORMALIZED query (matches the
+      // encode-side geometry); the batch is ≤ the driver cap here (an
+      // over-cap batch chunked above), so the collect is bounded
+      val qArr = collectBounded(
+        normalized(qRaw.select(col("qid").as("id"), col("qv").as("v")))
+          .as[(Long, Seq[Double])],
+        maxDriverQueries(spark), "probeIvfPqIndex query set",
+        MaxDriverQueriesKey)
+      val tables = buildAdcTables(qArr, books, m, ncodes, subDim)
+      val tablesB = scope.broadcast(spark, tables.toMap)
+      val mm = m; val nc = ncodes
+      // (cell)-joined pairs: the corpus side contributes only codes —
+      // the vector column is never read in this scan (column pruning)
+      val adc = cells.select(col("cid"), col("codes"), col("cell"))
+        .join(broadcast(probes.select("qid", "cell")), "cell")
+        .select(col("qid"), col("cid"), col("codes"))
+        .as[(Long, Long, Seq[Int])].mapPartitions { rows =>
+          rows.map { case (qid, cid, codes) =>
+            val t = tablesB.value(qid)
+            val ca = codes.toArray
+            var sim = 0.0; var s = 0
+            while (s < mm) { sim += t(s * nc + ca(s)); s += 1 }
+            (qid, cid, sim)
+          }
+        }.toDF("qid", "cid", "sim")
+      val sl = topK(adc, shortlist)
+
+      // exact re-rank against the TRUE (raw) vectors of probed cells —
+      // sims become bit-identical to bruteForceTopK's
+      val result = topK(scorePairs(
+          sl.select("qid", "cid")
+            .join(broadcast(qRaw), "qid")
+            .join(cells.select(col("cid"), col("cv")), "cid")
+            .select("qid", "cid", "qv", "cv"),
+          "qid", "cid"), k)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      result.count()
+      result
     }
-
-    val probes = probeCells(qRaw, centroids, nprobe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wanted = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cells = spark.read.parquet(s"$path/cells")
-      .filter(col("cell").isin(wanted.toSeq: _*))
-
-    // per-query ADC tables from the NORMALIZED query (matches the
-    // encode-side geometry); the batch is ≤ the driver cap here (an
-    // over-cap batch chunked above), so the collect is bounded
-    val qArr = collectBounded(
-      normalized(qRaw.select(col("qid").as("id"), col("qv").as("v")))
-        .as[(Long, Seq[Double])],
-      maxDriverQueries(spark), "probeIvfPqIndex query set",
-      MaxDriverQueriesKey)
-    val tables = buildAdcTables(qArr, books, m, ncodes, subDim)
-    val tablesB = spark.sparkContext.broadcast(tables.toMap)
-    val mm = m; val nc = ncodes
-    // (cell)-joined pairs: the corpus side contributes only codes —
-    // the vector column is never read in this scan (column pruning)
-    val adc = cells.select(col("cid"), col("codes"), col("cell"))
-      .join(broadcast(probes.select("qid", "cell")), "cell")
-      .select(col("qid"), col("cid"), col("codes"))
-      .as[(Long, Long, Seq[Int])].mapPartitions { rows =>
-        rows.map { case (qid, cid, codes) =>
-          val t = tablesB.value(qid)
-          val ca = codes.toArray
-          var sim = 0.0; var s = 0
-          while (s < mm) { sim += t(s * nc + ca(s)); s += 1 }
-          (qid, cid, sim)
-        }
-      }.toDF("qid", "cid", "sim")
-    val sl = topK(adc, shortlist)
-
-    // exact re-rank against the TRUE (raw) vectors of probed cells —
-    // sims become bit-identical to bruteForceTopK's
-    val result = topK(scorePairs(
-        sl.select("qid", "cid")
-          .join(broadcast(qRaw), "qid")
-          .join(cells.select(col("cid"), col("cv")), "cid")
-          .select("qid", "cid", "qv", "cv"),
-        "qid", "cid"), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    probes.unpersist(blocking = false)
-    // the ADC tables are one-shot: the result is materialized, so the
-    // executor copies can go now. unpersist, not destroy — if an
-    // executor dies and the cached result partition must be
-    // recomputed, the broadcast re-sends from the driver instead of
-    // failing the job
-    tablesB.unpersist(blocking = false)
-    result
+    }
   }
 
   /** Corpus-scaled hyperplane-LSH geometry for [[cosineNearDups]]:
@@ -1402,6 +1383,7 @@ object Similarity {
 
     val v = asDoubleVec(df, idCol, vecCol, "id", "v")
 
+    OperatorScope(spark) { scope =>
     val nBands = bandsEff
     val r = rEff
     val nBits = nBands * r
@@ -1437,7 +1419,7 @@ object Similarity {
           math.max(256, (math.ceil(need / 64.0) * 64).toInt))
       }
     val nSk = (skBits + 63) / 64
-    val banded = v.as[(Long, Seq[Double])].mapPartitions { rows =>
+    val banded = scope.persist(v.as[(Long, Seq[Double])].mapPartitions { rows =>
       rows.flatMap { case (id, vec) =>
         val a = vec.toArray
         val bvs = new Array[Long](nBands)
@@ -1462,8 +1444,7 @@ object Similarity {
         }
         (0 until nBands).iterator.map(b => (id, b, bvs(b), sk.toSeq))
       }
-    }.toDF("id", "band", "bv", "sk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.toDF("id", "band", "bv", "sk"))
 
     // Map-side sketch cut, BEFORE the distinct's exchange (the q52
     // simhash lesson, measured here as q77's 541× decade shuffle:
@@ -1520,7 +1501,6 @@ object Similarity {
     val result = verified.filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("sim"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the band signatures (see ivfTopK)
     result.count()
     // bounded read: the count() above ran the observed plan, but the
     // observation resolves via the (async) QueryExecutionListener bus
@@ -1546,8 +1526,8 @@ object Similarity {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
       }
     } catch { case scala.util.control.NonFatal(_) => () }
-    banded.unpersist(blocking = false)
     result
+    }
   }
 
   /** Semantic (embedding-level) dedup — the SemDeDup idea (Abbas et
@@ -1570,10 +1550,11 @@ object Similarity {
                     threshold: Double, bands: Int = 0,
                     planesPerBand: Int = 0, seed: Long = 7L,
                     knownCount: Long = -1L): DataFrame = {
-    val pairs = cosineNearDups(df, idCol, vecCol, threshold, bands,
-      planesPerBand, seed, knownCount)
-    try Dedup.dedupNearDups(df, idCol, pairs)
-    finally pairs.unpersist(blocking = false)
+    OperatorScope(df.sparkSession) { scope =>
+      val pairs = scope.adopt(cosineNearDups(df, idCol, vecCol, threshold,
+        bands, planesPerBand, seed, knownCount))
+      Dedup.dedupNearDups(df, idCol, pairs)
+    }
   }
 
   /** Deterministic sign random projection (Achlioptas 2003: ±1

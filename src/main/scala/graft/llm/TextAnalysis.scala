@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.exceptions._
+import graft.operators.OperatorScope
 
 /** Text-quality analysis for training-data pipelines: token counts,
   * type/token ratios, quality scoring, stopword-based language ID, and
@@ -504,13 +505,13 @@ object TextAnalysis {
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String,
                      smoothK: Double = 0.5): DataFrame = {
     require(smoothK > 0, s"smoothK must be positive: $smoothK")
-    // scoped cached-plan AQE (see AdaptiveCache): doc/vocab-bounded
-    // persists, broadcast-model joins — the winning shape
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
-    val toks = df.select(col(idCol).cast("long").as("id"),
+    // scoped cached-plan AQE (OperatorScope.CachedPlanAqe):
+    // doc/vocab-bounded persists, broadcast-model joins — the winning
+    // shape
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
+    val toks = scope.persist(df.select(col(idCol).cast("long").as("id"),
         explode(split(trim(lower(col(textCol))), "\\s+")).as("tok"))
-      .select(col("id"), xxhash64(col("tok")).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), xxhash64(col("tok")).as("g")))
     val freq = toks.groupBy("g").agg(count(lit(1)).as("__c"))
     val tot = freq.agg(sum("__c").as("__n"),
       count(lit(1)).as("__v"))
@@ -523,7 +524,6 @@ object TextAnalysis {
           .as("bits_per_token"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    toks.unpersist(blocking = false)
     out
     }
   }
@@ -852,10 +852,10 @@ object TextAnalysis {
                     vocabSize: Int): DataFrame = {
     if (vocabSize <= 0)
       throw InvalidArgumentValue(s"vocabSize must be positive: $vocabSize")
-    val toks = df.select(col(idCol).cast("long").as("id"),
+    OperatorScope(df.sparkSession) { scope =>
+    val toks = scope.persist(df.select(col(idCol).cast("long").as("id"),
         explode(split(trim(lower(col(textCol))), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("tok") =!= ""))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("__c"))
       .orderBy(col("__c").desc, col("tok").asc)
       .limit(vocabSize)
@@ -869,8 +869,8 @@ object TextAnalysis {
           .as("oov_rate"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    toks.unpersist(blocking = false)
     out
+    }
   }
 
   /** Corpus-trained bigram cross-entropy per document — q68's unigram
@@ -897,17 +897,16 @@ object TextAnalysis {
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String,
                     smoothK: Double = 0.5): DataFrame = {
     require(smoothK > 0, s"smoothK must be positive: $smoothK")
-    // scoped cached-plan AQE (see AdaptiveCache; unigramLogProb note)
-    graft.operators.AdaptiveCache.withCoalescedCaches(df.sparkSession) {
+    // scoped cached-plan AQE (the unigramLogProb note)
+    OperatorScope(df.sparkSession, OperatorScope.Coalesced) { scope =>
     val toksArr = split(trim(lower(col(textCol))), "\\s+")
-    val bi = df.select(col(idCol).cast("long").as("id"),
+    val bi = scope.persist(df.select(col(idCol).cast("long").as("id"),
         toksArr.as("__t"))
       .filter(size(col("__t")) >= 2)
       .select(col("id"), explode(arrays_zip(
         slice(col("__t"), lit(1), size(col("__t")) - 1).as("w1"),
         slice(col("__t"), lit(2), size(col("__t")) - 1).as("w2"))).as("__b"))
-      .select(col("id"), col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("__b.w1").as("w1"), col("__b.w2").as("w2")))
     // V counts every token position's type, including each document's
     // final token (not just bigram-first positions): count w1 types
     // and the distinct final tokens never seen as w1 — cheaper than
@@ -930,7 +929,6 @@ object TextAnalysis {
           .as("bits_per_bigram"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    bi.unpersist(blocking = false)
     out
     }
   }

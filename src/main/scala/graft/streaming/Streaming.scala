@@ -353,23 +353,19 @@ object Streaming {
             // driver heap on a ~100-doc batch). An eager
             // localCheckpoint turns every downstream leaf into a flat
             // scan of materialized batch-sized blocks; the blocks are
-            // tracked and released as soon as the batch lands
-            // (Lineage.checkpointTracked — localCheckpoint blocks
-            // live outside the CacheManager).
-            val (snap, snapRdds) =
-              graft.operators.Lineage.checkpointTracked(survivors)
-            try {
-              val pairs = graft.llm.Dedup.minhashNearDups(
-                snap, idCol, textCol,
-                threshold = threshold, minBandMatches = minBandMatches,
-                maxBandBucket = maxBandBucket)
+            // released as soon as the batch lands.
+            graft.operators.OperatorScope(spark) { scope =>
+              val snap = scope.checkpoint(survivors)
               // dedupNearDups' cluster labels materialize eagerly
               // (dupClusters is iterative), so pairs is only read
               // during the call; released right after the write
-              try graft.llm.Dedup.dedupNearDups(snap, idCol, pairs)
+              val pairs = scope.adopt(graft.llm.Dedup.minhashNearDups(
+                snap, idCol, textCol,
+                threshold = threshold, minBandMatches = minBandMatches,
+                maxBandBucket = maxBandBucket))
+              graft.llm.Dedup.dedupNearDups(snap, idCol, pairs)
                 .write.mode("overwrite").parquet(dest)
-              finally pairs.unpersist(blocking = false)
-            } finally snapRdds.foreach(_.unpersist(blocking = false))
+            }
           }
           if (updateIndex)
             // sign exactly what landed (re-read: cheap, and immune to

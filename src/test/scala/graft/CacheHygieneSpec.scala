@@ -15,7 +15,9 @@ import graft.llm.{Dedup, Similarity}
   *
   * Methodology: diff `sc.getPersistentRDDs` around the call, then
   * unpersist the returned frame and assert every NEW entry is gone —
-  * robust to residue other suites leave in the shared session.
+  * robust to residue other suites leave in the shared session. The
+  * session's SQL conf must also read exactly as before the call: an
+  * operator's scoped conf never outlives it.
   */
 class CacheHygieneSpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +32,7 @@ class CacheHygieneSpec extends SparkSpec {
   private def assertReleasesAll(op: => DataFrame): Long = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val confBefore = spark.conf.getAll
     val result = op
     val n = result.count()
     result.unpersist(blocking = true)
@@ -37,7 +40,17 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty,
       s"operator leaked ${leaked.size} persistent RDD(s): " +
         leaked.toSeq.sorted.map(sc.getPersistentRDDs(_).name).mkString(", "))
+    assertConfUnchanged(confBefore)
     n
+  }
+
+  private def assertConfUnchanged(before: Map[String, String]): Unit = {
+    val after = spark.conf.getAll
+    val changed = (before.keySet ++ after.keySet)
+      .filter(k => before.get(k) != after.get(k))
+    assert(changed.isEmpty, "operator leaked session conf: " +
+      changed.toSeq.sorted.map(k =>
+        s"$k ${before.get(k)} -> ${after.get(k)}").mkString(", "))
   }
 
   /** Like [[assertReleasesAll]] but for operators composing
@@ -51,6 +64,7 @@ class CacheHygieneSpec extends SparkSpec {
   private def assertNoCacheResidue(op: => DataFrame): Long = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val confBefore = spark.conf.getAll
     val result = op
     val n = result.count()
     result.unpersist(blocking = true)
@@ -61,6 +75,7 @@ class CacheHygieneSpec extends SparkSpec {
       s"operator leaked ${cached.size} NON-checkpoint persistent " +
         s"RDD(s): ${cached.toSeq.sorted
           .map(sc.getPersistentRDDs(_).name).mkString(", ")}")
+    assertConfUnchanged(confBefore)
     n
   }
 
@@ -233,7 +248,7 @@ class CacheHygieneSpec extends SparkSpec {
     } finally { gs.unpersist(blocking = true); () }
   }
 
-  test("checkpointTracked carries MEASURED stats and survives deep iteration") {
+  test("scope checkpoint carries MEASURED stats and survives deep iteration") {
     // localCheckpoint freezes the pre-checkpoint plan ESTIMATE into
     // the LogicalRDD leaf; Catalyst's size-only estimator multiplies
     // sizeInBytes through inner joins, so an iterative self-joining
@@ -247,29 +262,27 @@ class CacheHygieneSpec extends SparkSpec {
     // 1) the checkpointed leaf's stats are the measured size: small
     //    (kilobytes), not the pre-checkpoint estimate and not
     //    defaultSizeInBytes (Long.MaxValue)
-    val (cp0, rdds0) = graft.operators.Lineage.checkpointTracked(base)
-    val leafStats = cp0.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(leafStats > 0 && leafStats < 10L * 1024 * 1024,
-      s"expected measured-kilobyte stats, got $leafStats")
-    rdds0.foreach(_.unpersist(blocking = false))
-    // 2) 30 rounds of checkpoint + self-join must keep PLANNING alive
-    //    (pre-fix this overflowed at ~25) and keep stats bounded
-    var cur = base
-    var rdds = Seq.empty[org.apache.spark.rdd.RDD[_]]
-    try {
+    graft.operators.OperatorScope(spark) { scope =>
+      val cp0 = scope.checkpoint(base)
+      val leafStats = cp0.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(leafStats > 0 && leafStats < 10L * 1024 * 1024,
+        s"expected measured-kilobyte stats, got $leafStats")
+      scope.release(cp0)
+      // 2) 30 rounds of checkpoint + self-join must keep PLANNING alive
+      //    (pre-fix this overflowed at ~25) and keep stats bounded
+      var cur = base
       (1 to 30).foreach { _ =>
         val joined = cur.as("a").join(cur.as("b"), "k")
           .groupBy(col("k")).agg(min(col("a.id")).as("id"))
           .select(col("id"), col("k"))
-        val (next, nextRdds) = graft.operators.Lineage.checkpointTracked(joined)
-        rdds.foreach(_.unpersist(blocking = false))
-        rdds = nextRdds
+        val next = scope.checkpoint(joined)
+        scope.release(cur)
         cur = next
       }
       val finalStats = cur.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(finalStats.bitLength < 64,
         s"stats compounded across rounds: ${finalStats.bitLength} bits")
       assert(cur.count() == 7)
-    } finally rdds.foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -13,7 +13,10 @@ Bench writes) or a recorded clean-medians file
 Prints per-query task_sec ratios beyond the threshold (default 1.25×
 either way), with the shuffle/task-count columns that distinguish a
 structural regression (those move) from interleave/GC noise (they
-don't), plus the new-only and gone-only query sets.
+don't), plus the new-only and gone-only query sets. A "structure
+changed" section lists every shared query whose tasks, jobs or
+shuffle_write_mb differ between the two bench outputs (empty for a
+plan-neutral change; clean-medians files carry no structure).
 """
 import json
 import sys
@@ -26,7 +29,8 @@ def load(path):
     # stageMetrics per query + queries (wall)
     if "stageMetrics" in d:
         ts = {k: v.get("task_sec") for k, v in d["stageMetrics"].items()}
-        extra = {k: (v.get("shuffle_write_mb"), v.get("tasks"))
+        extra = {k: (v.get("shuffle_write_mb"), v.get("tasks"),
+                     v.get("jobs"))
                  for k, v in d["stageMetrics"].items()}
     else:
         ts = d.get("task_sec", {})
@@ -54,11 +58,21 @@ def main():
     print(f"{'query':38s} {'old_ts':>8s} {'new_ts':>8s} {'ratio':>6s} "
           f"{'old_wall':>8s} {'new_wall':>8s}  structure(new)")
     for k, a, b, r in flagged:
-        sw, tk = nex.get(k, (None, None))
+        sw, tk, _ = nex.get(k, (None, None, None))
         struct = f"shuffle={sw}MB tasks={tk}" if sw is not None else ""
         print(f"{k:38s} {a:8.1f} {b:8.1f} {r:6.2f} "
               f"{owall.get(k, float('nan')):8.2f} "
               f"{nwall.get(k, float('nan')):8.2f}  {struct}")
+    moved = [k for k in shared
+             if k in oex and k in nex and oex[k] != nex[k]]
+    print(f"\n# structure changed ({len(moved)} of {len(shared)} shared "
+          f"queries: tasks, jobs or shuffle_write_mb differ)")
+    if moved:
+        print(f"{'query':38s} {'tasks':>11s} {'jobs':>9s} {'shuffle_mb':>17s}")
+    for k in moved:
+        (osw, otk, ojb), (nsw, ntk, njb) = oex[k], nex[k]
+        print(f"{k:38s} {otk!s:>5s}->{ntk!s:<5s} {ojb!s:>4s}->{njb!s:<4s} "
+              f"{osw!s:>8s}->{nsw!s:<8s}")
     new_only = sorted(set(nts) - set(ots))
     gone = sorted(set(ots) - set(nts))
     if new_only:
