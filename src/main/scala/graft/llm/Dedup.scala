@@ -213,15 +213,16 @@ object Dedup {
     lit(8) - bit_count(nz)
   }
 
-  /** Sketch-cut geometry shared by `minhashNearDups` and
-    * `probeMinhashIndex`: (packed longs, minimum matching bytes) for a
-    * 6σ one-sided cut at `threshold` on a ≤32-byte signature
-    * truncation, with the byte-truncation collision bias folded in as
-    * P(match) = J + (1−J)/256. cutBytes < 1 means the threshold is too
-    * low for the sketch to separate at 6σ — callers disable the cut.
+  /** The map-side sketch cut shared by `minhashNearDups` and
+    * `probeMinhashIndex`: (packed sketch longs, pair predicate over the
+    * `x`/`y` banded sides) for a 6σ one-sided cut at `threshold` on a
+    * ≤32-byte signature truncation, with the byte-truncation collision
+    * bias folded in as P(match) = J + (1−J)/256. When the threshold is
+    * too low for the sketch to separate at 6σ, or `engage` is false,
+    * no sketch columns are carried and the predicate is `true`.
     */
-  private def sketchCutGeometry(numHashes: Int,
-                                threshold: Double): (Int, Int) = {
+  private def sketchCut(numHashes: Int, threshold: Double,
+                        engage: Boolean): (Int, Column) = {
     val pMatch = threshold + (1 - threshold) / 256.0
     val skLongs = math.min(4, numHashes / 8)
     val kBytes = 8 * skLongs
@@ -229,7 +230,101 @@ object Dedup {
       if (skLongs <= 0) 0
       else math.floor(kBytes * pMatch -
         6.0 * math.sqrt(kBytes * pMatch * (1 - pMatch))).toInt
-    (skLongs, cutBytes)
+    if (!engage || cutBytes < 1) (0, lit(true))
+    else (skLongs, (0 until skLongs).map(j =>
+      byteMatches(col(s"x.sk$j"), col(s"y.sk$j"))).reduce(_ + _) >=
+      lit(cutBytes))
+  }
+
+  /** Shared parameter check of the minhash operators: a zero `bands`
+    * would divide by zero, and a threshold outside (0, 1] (NaN
+    * included) makes the 6σ slack NaN, so every estimate comparison is
+    * false and the operator would silently return no pairs.
+    */
+  private def requireMinhashParams(numHashes: Int, bands: Int,
+                                   threshold: Double): Unit = {
+    if (numHashes <= 0)
+      throw InvalidArgumentValue(
+        s"numHashes must be positive, got $numHashes")
+    if (bands <= 0)
+      throw InvalidArgumentValue(s"bands must be positive, got $bands")
+    requireThreshold(threshold)
+    if (numHashes % bands != 0)
+      throw InvalidArgumentValue(
+        s"numHashes ($numHashes) must be divisible by bands ($bands)")
+  }
+
+  /** `threshold` in (0, 1]; written so that NaN fails too. */
+  private def requireThreshold(threshold: Double): Unit =
+    if (!(threshold > 0.0 && threshold <= 1.0))
+      throw InvalidArgumentValue(
+        s"threshold must be in (0, 1], got $threshold")
+
+  /** Signature-similarity prefilter over candidate (id_a, id_b) pairs:
+    * the fraction of matching minhash components is an unbiased
+    * Jaccard estimate with σ = sqrt(J(1−J)/numHashes) (≈0.035 at
+    * J=0.8, 128 hashes), so pairs estimated below threshold − 6σ are
+    * dropped before the expensive set intersection — a true pair at
+    * the threshold fails a 6σ one-sided cut at ~1e-9 (4σ would be
+    * ~3e-5, ABOVE the module's <1e-7 budget). The estimate is
+    * numHashes codegen'd comparisons per pair. `sigA` / `sigB` are
+    * (id, m0..) signature frames for the two sides; `hintB` wraps the
+    * projected b side (a caller's broadcast hint).
+    */
+  private def signatureEstimate(pairs: DataFrame, sigA: DataFrame,
+                                sigB: DataFrame, numHashes: Int,
+                                threshold: Double,
+                                hintB: DataFrame => DataFrame = identity)
+      : DataFrame = {
+    val slack = 6.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
+    def side(sig: DataFrame, id: String, p: String): DataFrame =
+      sig.select(col("id").as(id) +:
+        (0 until numHashes).map(i => col(s"m$i").as(s"$p$i")): _*)
+    val estMatches = (0 until numHashes)
+      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    pairs
+      .join(side(sigA, "id_a", "a"), "id_a")
+      .join(hintB(side(sigB, "id_b", "b")), "id_b")
+      .filter(estMatches.cast("double") / numHashes >= threshold - slack)
+      .select("id_a", "id_b")
+  }
+
+  /** |A ∩ B| per candidate pair, join-based: `a` and `b` are DISTINCT
+    * (id, `key`) rows of the two sides, and the pairs join each side
+    * on its id, then the b side on (id_b, key). No arrays are
+    * materialized or carried through shuffles, and every step is
+    * codegen'd; a candidate side AQE sees as small broadcasts, so each
+    * join streams its set rows once and drops non-candidates in place.
+    * Output (id_a, id_b, ix).
+    */
+  private def overlaps(pairs: DataFrame, a: DataFrame, b: DataFrame,
+                       key: String): DataFrame =
+    pairs
+      .join(a.select(col("id").as("id_a"), col(key)), "id_a")
+      .join(b.select(col("id").as("id_b"), col(key)), Seq("id_b", key))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ix"))
+
+  /** Exact Jaccard verify: |A ∪ B| = |A|+|B|−|A∩B| from the caller's
+    * per-doc set sizes (`sizesA` / `sizesB`: (id, size)), pairs below
+    * `threshold` dropped. The result (id_a, id_b, jaccard) is persisted
+    * and counted, so it is materialized when it is returned.
+    */
+  private def exactJaccard(pairs: DataFrame, a: DataFrame, b: DataFrame,
+                           key: String, sizesA: DataFrame,
+                           sizesB: DataFrame,
+                           threshold: Double): DataFrame = {
+    val result = overlaps(pairs, a, b, key)
+      .join(sizesA.toDF("id_a", "na"), "id_a")
+      .join(sizesB.toDF("id_b", "nb"), "id_b")
+      .withColumn("jaccard",
+        col("ix").cast("double") / (col("na") + col("nb") - col("ix"))
+          .cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    result.count()
+    result
   }
 
   /** MinHash-LSH near-duplicate pairs, exact-verified.
@@ -306,9 +401,7 @@ object Dedup {
                       maxBandBucket: Int = 2000,
                       seed: Long = 42L,
                       sigFamily: String = "affine"): DataFrame = {
-    if (numHashes % bands != 0)
-      throw InvalidArgumentValue(
-        s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    requireMinhashParams(numHashes, bands, threshold)
     if (sigFamily != "affine" && sigFamily != "oph")
       throw InvalidArgumentValue(
         s"sigFamily must be 'affine' or 'oph', got '$sigFamily'")
@@ -377,15 +470,8 @@ object Dedup {
 
     val sketchKnee = df.sparkSession.conf
       .get("graft.dedup.pairSketchMinCorpus", "20000").toLong
-    val (skLongs0, cutBytes) = sketchCutGeometry(numHashes, threshold)
-    val skLongs =
-      if (cutBytes >= 1 && (sketchKnee <= 0 || nDocs >= sketchKnee))
-        skLongs0
-      else 0
-    def skCut: Column =
-      (0 until skLongs).map(j =>
-        byteMatches(col(s"x.sk$j"), col(s"y.sk$j"))).reduce(_ + _) >=
-        lit(cutBytes)
+    val (skLongs, skCut) = sketchCut(numHashes, threshold,
+      engage = sketchKnee <= 0 || nDocs >= sketchKnee)
     val skCols = (0 until skLongs).map(j => s"sk$j")
 
     // band signatures: a cheap projection of the persisted sig, so the
@@ -394,15 +480,16 @@ object Dedup {
 
     // one row per (pair, matching band); both enumeration modes feed
     // the same band-agreement count below
+    def bandSelfJoin(b: DataFrame): DataFrame =
+      b.as("x")
+        .join(b.as("y"),
+          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+            col("x.id") < col("y.id"))
+        .filter(skCut)
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
     var guardReport: () => Unit = () => ()
     val pairBands =
-      if (maxBandBucket <= 0)
-        banded.as("x")
-          .join(banded.as("y"),
-            col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-              col("x.id") < col("y.id"))
-          .filter(if (skLongs > 0) skCut else lit(true))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+      if (maxBandBucket <= 0) bandSelfJoin(banded)
       else {
         // per-bucket size + min id in one window pass (same window
         // spec → one shuffle+sort); a hot bucket lands in one task
@@ -423,14 +510,8 @@ object Dedup {
           .withColumn("bsz", count(lit(1)).over(w))
           .withColumn("mn", min("id").over(w)))
         sized.count()
-        val small = sized.filter(col("bsz") <= maxBandBucket)
-          .select(("id" +: "band" +: "bh" +: skCols).map(col): _*)
-        val allPairs = small.as("x")
-          .join(small.as("y"),
-            col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-              col("x.id") < col("y.id"))
-          .filter(if (skLongs > 0) skCut else lit(true))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        val allPairs = bandSelfJoin(sized.filter(col("bsz") <= maxBandBucket)
+          .select(("id" +: "band" +: "bh" +: skCols).map(col): _*))
         // oversized buckets: min-id star, linear in bucket size
         val (over, report) = observeStarGuard(
           sized.filter(col("bsz") > maxBandBucket), "bsz",
@@ -447,20 +528,13 @@ object Dedup {
       .filter(col("mb") >= minBandMatches)
       .select("id_a", "id_b")
 
-    // signature-similarity prefilter: the fraction of matching minhash
-    // components is an unbiased Jaccard estimate with
-    // σ = sqrt(J(1−J)/numHashes) (≈0.035 at J=0.8, 128 hashes), so
-    // candidates estimated below threshold − 6σ are dropped before the
-    // expensive set-intersection — a true pair at the threshold fails
-    // a 6σ one-sided cut at ~1e-9 (4σ would be ~3e-5, ABOVE the
-    // module's <1e-7 budget). On a high-background corpus this is the
-    // difference between exact-verifying tens of thousands of moderate
-    // pairs and a few hundred (measured 75k → O(100) at sf0.1): the
-    // estimate is numHashes codegen'd comparisons per pair. With the
-    // candidate side broadcast, each signature join is a pure scan of
-    // the persisted sig — at 5B docs the TB-scale signature table
-    // never shuffles and never builds.
-    val slack = 6.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
+    // signature-similarity prefilter (6σ, `signatureEstimate`): on a
+    // high-background corpus this is the difference between
+    // exact-verifying tens of thousands of moderate pairs and a few
+    // hundred (measured 75k → O(100) at sf0.1). With the candidate
+    // side broadcast, each signature join is a pure scan of the
+    // persisted sig — at 5B docs the TB-scale signature table never
+    // shuffles and never builds.
     // Estimate-join input (round-13 verdict #6): the two estimate
     // joins each scanned the FULL 128-column signature cache — at the
     // design point that is a TB-scale table read twice per funnel run.
@@ -486,15 +560,6 @@ object Dedup {
         sigCand.count()
         (candCk, sigCand)
       }
-    val aSide = estSig.select(
-      col("id").as("id_a") +:
-        (0 until numHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val bSide = estSig.select(
-      col("id").as("id_b") +:
-        (0 until numHashes).map(i => col(s"m$i").as(s"b$i")): _*)
-    val estMatches = (0 until numHashes)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _)
     // candidates and strong sit behind shuffles (the band-agreement
     // aggregate), so AQE re-plans their joins from ACTUAL stage
     // sizes: small sides broadcast, floods demote to sort-merge — no
@@ -506,18 +571,12 @@ object Dedup {
     // agreement aggregate + two 128-column estimate joins) — measured
     // as a q31/q57 bench regression when the candidate-pruned verify
     // first landed referencing it twice more.
-    val strong = scope.persist(estCandidates
-      .join(aSide, "id_a")
-      .join(bSide, "id_b")
-      .filter(estMatches.cast("double") / numHashes >= threshold - slack)
-      .select("id_a", "id_b"))
+    val strong = scope.persist(signatureEstimate(estCandidates,
+      estSig, estSig, numHashes, threshold))
 
-    // exact verification, join-based: |A ∩ B| is a count over the
-    // DISTINCT shingle rows of both candidate sides,
-    // |A ∪ B| = |A|+|B|−|A∩B| — set sizes come from one aggregation.
-    // No arrays are materialized or carried through shuffles, and
-    // every step is codegen'd. Set semantics are restored HERE, after
-    // pruning to candidate docs: the semi join streams the persisted
+    // exact verification (`exactJaccard`) over the DISTINCT shingle
+    // rows of both candidate sides. Set semantics are restored HERE,
+    // after pruning to candidate docs: the semi join streams the persisted
     // raw shingle cache once and drops non-candidates in place (the
     // tiny candidate side broadcasts — AQE, from its actual stage
     // size), so the dedup exchange is candidate-sized. The old shape
@@ -530,21 +589,8 @@ object Dedup {
       .join(candIds, Seq("id"), "left_semi")
       .distinct())
     val sizes = candShingles.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = strong
-      .join(candShingles.select(col("id").as("id_a"), col("s")), "id_a")
-      .join(candShingles.select(col("id").as("id_b"), col("s")),
-        Seq("id_b", "s"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ix"))
-    val result = inter
-      .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
-      .withColumn("jaccard",
-        col("ix").cast("double") / (col("na") + col("nb") - col("ix"))
-          .cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
+    val result = exactJaccard(strong, candShingles, candShingles, "s",
+      sizes, sizes, threshold)
     guardReport()
     result
     }
@@ -749,9 +795,7 @@ object Dedup {
                         minBandMatches: Int = 1,
                         seed: Long = 42L,
                         excludeIndexBatches: Seq[String] = Nil): DataFrame = {
-    if (numHashes % bands != 0)
-      throw InvalidArgumentValue(
-        s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    requireMinhashParams(numHashes, bands, threshold)
     val spark = newDf.sparkSession
     val idxRaw = spark.read.parquet(indexPath)
     val sigWidth = idxRaw.columns.count(_.matches("m\\d+"))
@@ -828,12 +872,7 @@ object Dedup {
     // knee: the cut is on whenever the threshold is 6σ-separable on
     // 32 bytes (below-cut survivors are unchanged — the full estimate
     // and the exact verify still run).
-    val (pSkLongs0, pCutBytes) = sketchCutGeometry(numHashes, threshold)
-    val pSkLongs = if (pCutBytes >= 1) pSkLongs0 else 0
-    def pSkCut: Column =
-      (0 until pSkLongs).map(j =>
-        byteMatches(col(s"x.sk$j"), col(s"y.sk$j"))).reduce(_ + _) >=
-        lit(pCutBytes)
+    val (pSkLongs, pSkCut) = sketchCut(numHashes, threshold, engage = true)
     val newBanded = bandedOf(newSig, numHashes, bands, pSkLongs)
     // Lineage cut, not persist: nested caches re-print their plans at
     // every reference (measured: probe + funnel under foreachBatch
@@ -844,7 +883,7 @@ object Dedup {
         .join((if (batchSafe) broadcast(newBanded) else newBanded).as("y"),
           col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
             col("x.id") =!= col("y.id"))
-        .filter(if (pSkLongs > 0) pSkCut else lit(true))
+        .filter(pSkCut)
         .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
         .agg(count(lit(1)).as("mb"))
         .filter(col("mb") >= minBandMatches)
@@ -865,28 +904,14 @@ object Dedup {
     def bcastIfSafe(df: DataFrame): DataFrame =
       if (safeBcast) broadcast(df) else df
 
-    // signature-estimate prefilter (6σ, see minhashNearDups)
-    val slack = 6.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
-    val aSide = idxSig.select(
-      col("id").as("id_a") +:
-        (0 until numHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val bSide = newSig.select(
-      col("id").as("id_b") +:
-        (0 until numHashes).map(i => col(s"m$i").as(s"b$i")): _*)
-    val estMatches = (0 until numHashes)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _)
     // persisted: `strong` feeds candA and the verify join — without
     // it each consumer would re-run the band join and estimate, i.e.
     // extra full scans of the signature index. Candidate/batch sides
     // broadcast statically for the same no-corpus-shuffle-write
     // reason as the band join above (candidates are bounded by the
     // batch's band matches, batch signatures by the batch itself)
-    val strong = scope.persist(bcastIfSafe(candidates)
-      .join(aSide, "id_a")
-      .join(bcastIfSafe(bSide), "id_b")
-      .filter(estMatches.cast("double") / numHashes >= threshold - slack)
-      .select("id_a", "id_b")
+    val strong = scope.persist(signatureEstimate(bcastIfSafe(candidates),
+        idxSig, newSig, numHashes, threshold, hintB = bcastIfSafe)
       // a duplicate id in the index (a doc appended under two tags, in
       // violation of the uniqueness contract) would duplicate rows here
       // and double-count `ix` below — i.e. emit a WRONG jaccard rather
@@ -908,24 +933,9 @@ object Dedup {
       shingleHashRows(corpus, idCol, textCol, shingleK)
         .join(bcastIfSafe(candA), Seq("id"), "left_semi")
         .distinct())
-    val sizesA = corpusShingles.groupBy("id").agg(count(lit(1)).as("na"))
-    val sizesB = newShingles.groupBy("id").agg(count(lit(1)).as("nb"))
-    val inter = strong
-      .join(corpusShingles.select(col("id").as("id_a"), col("s")), "id_a")
-      .join(newShingles.select(col("id").as("id_b"), col("s")),
-        Seq("id_b", "s"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ix"))
-    val result = inter
-      .join(sizesA.select(col("id").as("id_a"), col("na")), "id_a")
-      .join(sizesB.select(col("id").as("id_b"), col("nb")), "id_b")
-      .withColumn("jaccard",
-        col("ix").cast("double") / (col("na") + col("nb") - col("ix"))
-          .cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    result
+    exactJaccard(strong, corpusShingles, newShingles, "s",
+      corpusShingles.groupBy("id").agg(count(lit(1)).as("na")),
+      newShingles.groupBy("id").agg(count(lit(1)).as("nb")), threshold)
     }
   }
 
@@ -1014,6 +1024,50 @@ object Dedup {
     }
   }
 
+  /** Rare-first prefix build shared by the n-gram prefix-filter joins:
+    * returns (grams, sizes, prefix). `grams` is the persisted distinct
+    * (id, g) rows, `sizes` (id, sz) per doc, and `prefix` (id, g, sz)
+    * each doc's first |d| − ⌈t·|d|⌉ + 1 grams in ascending global
+    * document frequency (ties broken by gram hash, so the order is
+    * total), persisted and counted. The saturation guard runs on the
+    * frequency frame first, so `grams` is materialized by its pass.
+    *
+    * Join strategies downstream come from REAL sizes, not estimates:
+    * both caches are materialized before anything downstream is
+    * planned (the guard's pass fills grams; the prefix count fills
+    * prefix — the work runs once either way), so the planner sees true
+    * cache bytes and will never broadcast a corpus-proportional side
+    * (the measured q31-class 1 GB-broadcast failure, SCALING.md round
+    * 8); every side behind a shuffle (the candidate distinct) is
+    * re-planned by AQE from its actual stage size — small sides
+    * broadcast, floods demote to sort-merge. Explicit hint/count
+    * machinery was tried and measured strictly slower (BENCHNOTES
+    * round 8).
+    */
+  private def gramPrefixes(scope: OperatorScope, df: DataFrame,
+                           idCol: String, textCol: String, n: Int,
+                           threshold: Double, op: String,
+                           saturationMode: String,
+                           minDistinctGramRatio: Double)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val grams = scope.persist(wordGramRows(df, idCol, textCol, n))
+    val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
+    val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))
+    gramSaturationGuard(freq, n, op, saturationMode, minDistinctGramRatio)
+    // rarest-first total order; row_number is one shuffle+sort per doc
+    val rankW = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("df").asc, col("g").asc)
+    val prefix = scope.persist(grams
+      .join(freq, "g")
+      .withColumn("rn", row_number().over(rankW))
+      .join(sizes, "id")
+      .filter(col("rn") <=
+        col("sz") - ceil(col("sz") * lit(threshold) - lit(1e-9)) + 1)
+      .select(col("id"), col("g"), col("sz")))
+    prefix.count()
+    (grams, sizes, prefix)
+  }
+
   /** EXACT word-n-gram Jaccard near-duplicate pairs — no sketch, no
     * probabilistic recall: every pair with Jaccard ≥ `threshold` over
     * distinct word n-grams is returned (the complement of
@@ -1063,44 +1117,14 @@ object Dedup {
                            threshold: Double = 0.5,
                            saturationMode: String = "warn",
                            minDistinctGramRatio: Double = 0.05): DataFrame = {
-    if (threshold <= 0.0 || threshold > 1.0)
-      throw InvalidArgumentValue(
-        s"threshold must be in (0, 1], got $threshold")
+    requireThreshold(threshold)
     if (n <= 0)
       throw InvalidArgumentValue(s"n must be positive, got $n")
 
     OperatorScope(df.sparkSession) { scope =>
-    // persisted: frequency count, ranking, and exact verify all read it
-    val grams = scope.persist(wordGramRows(df, idCol, textCol, n))
-
-    val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
-    val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    gramSaturationGuard(freq, n, "ngramJaccardNearDups",
-      saturationMode, minDistinctGramRatio)
-
-    // rarest-first total order; row_number is one shuffle+sort per doc
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df").asc, col("g").asc)
-    val prefix = scope.persist(grams
-      .join(freq, "g")
-      .withColumn("rn", row_number().over(rankW))
-      .join(sizes, "id")
-      .filter(col("rn") <=
-        col("sz") - ceil(col("sz") * lit(threshold) - lit(1e-9)) + 1)
-      .select(col("id"), col("g"), col("sz")))
-
-    // Join strategies come from REAL sizes, not estimates: both
-    // caches are materialized before anything downstream is planned
-    // (the saturation guard's frequency pass fills grams; this count
-    // fills prefix — the work runs once either way), so the planner
-    // sees true cache bytes and will never broadcast a corpus-
-    // proportional side (the measured q31-class 1 GB-broadcast
-    // failure, SCALING.md round 8); every side behind a shuffle (the
-    // candidate distinct) is re-planned by AQE from its actual stage
-    // size — small sides broadcast, floods demote to sort-merge.
-    // Explicit hint/count machinery was tried and measured strictly
-    // slower (BENCHNOTES round 8).
-    prefix.count()
+    val (grams, sizes, prefix) = gramPrefixes(scope, df, idCol, textCol,
+      n, threshold, "ngramJaccardNearDups", saturationMode,
+      minDistinctGramRatio)
     val candidates = prefix.as("x")
       .join(prefix.as("y"),
         col("x.g") === col("y.g") && col("x.id") < col("y.id") &&
@@ -1109,26 +1133,10 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
 
-    // exact verify: identical shape to minhashNearDups' final stage —
-    // the candidate side broadcasts (AQE, actual size), so each join
-    // streams the persisted gram rows once; the broadcast join IS the
-    // candidate prune, applied in place during the scan
-    val inter = candidates
-      .join(grams.select(col("id").as("id_a"), col("g")), "id_a")
-      .join(grams.select(col("id").as("id_b"), col("g")),
-        Seq("id_b", "g"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ix"))
-    val result = inter
-      .join(sizes.select(col("id").as("id_a"), col("sz").as("na")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("sz").as("nb")), "id_b")
-      .withColumn("jaccard",
-        col("ix").cast("double") / (col("na") + col("nb") - col("ix"))
-          .cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    result
+    // exact verify: the candidate side broadcasts (AQE, actual size),
+    // so each join streams the persisted gram rows once; the broadcast
+    // join IS the candidate prune, applied in place during the scan
+    exactJaccard(candidates, grams, grams, "g", sizes, sizes, threshold)
     }
   }
 
@@ -1162,32 +1170,13 @@ object Dedup {
                            threshold: Double = 0.8,
                            saturationMode: String = "warn",
                            minDistinctGramRatio: Double = 0.05): DataFrame = {
-    if (threshold <= 0.0 || threshold > 1.0)
-      throw InvalidArgumentValue(
-        s"threshold must be in (0, 1], got $threshold")
+    requireThreshold(threshold)
     if (n <= 0)
       throw InvalidArgumentValue(s"n must be positive, got $n")
     OperatorScope(df.sparkSession) { scope =>
-    val grams = scope.persist(wordGramRows(df, idCol, textCol, n))
-    val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
-    val freq = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    gramSaturationGuard(freq, n, "ngramContainmentJoin",
-      saturationMode, minDistinctGramRatio)
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df").asc, col("g").asc)
-    val prefix = scope.persist(grams
-      .join(freq, "g")
-      .withColumn("rn", row_number().over(rankW))
-      .join(sizes, "id")
-      .filter(col("rn") <=
-        col("sz") - ceil(col("sz") * lit(threshold) - lit(1e-9)) + 1)
-      .select(col("id"), col("g"), col("sz")))
-    // real stats before planning (the ngramJaccardNearDups
-    // rationale): grams filled by the guard's pass, prefix by this
-    // count — the planner never broadcasts a corpus-proportional
-    // cache, and AQE picks the shuffle-backed sides' strategies from
-    // actual stage sizes
-    prefix.count()
+    val (grams, sizes, prefix) = gramPrefixes(scope, df, idCol, textCol,
+      n, threshold, "ngramContainmentJoin", saturationMode,
+      minDistinctGramRatio)
     val allG = grams.join(sizes, "id")
     val candidates = prefix.as("x")
       .join(allG.as("y"),
@@ -1195,12 +1184,7 @@ object Dedup {
           col("y.sz") >= col("x.sz") * lit(threshold) - lit(1e-9))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    val inter = candidates
-      .join(grams.select(col("id").as("id_a"), col("g")), "id_a")
-      .join(grams.select(col("id").as("id_b"), col("g")),
-        Seq("id_b", "g"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("ix"))
-    val result = inter
+    val result = overlaps(candidates, grams, grams, "g")
       .join(sizes.select(col("id").as("id_a"), col("sz").as("na")),
         "id_a")
       .withColumn("containment",

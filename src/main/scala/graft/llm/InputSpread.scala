@@ -32,15 +32,15 @@ import org.apache.spark.sql.functions.col
   * — it never plans an adaptive stage or runs a job. Frames not
   * backed by a simple file relation (joins, unions, cached frames)
   * report no input files and are left unchanged (unknown layout =
-  * conservative no-op). `graft.scan.spreadSmallInputs=false` disables
-  * the rewrite entirely.
+  * conservative no-op).
   */
 private[graft] object InputSpread {
 
+  /** Compressed input bytes per spread slice (≈ a few hundred docs). */
+  private val SliceBytes = 64L * 1024
+
   def spreadSmallScan(df: DataFrame, key: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.conf.get("graft.scan.spreadSmallInputs", "true").toBoolean)
-      return df
     val par = spark.sparkContext.defaultParallelism
     val files =
       try df.inputFiles
@@ -65,14 +65,11 @@ private[graft] object InputSpread {
     // aggregate-buffer setup per task in the gram pipelines), so
     // fanning a 100 KB reference table out to 32 tasks costs more
     // wall than the serial explode it replaces (measured: q126
-    // +1 s wall at width 32). One slice per `spreadSliceBytes` of
-    // compressed input (default 64 KB ≈ a few hundred docs) keeps the
-    // per-task overhead amortized while medium inputs still reach
-    // full parallelism.
-    val slice = math.max(1L,
-      spark.conf.get("graft.scan.spreadSliceBytes", "65536").toLong)
+    // +1 s wall at width 32). One slice per `SliceBytes` of
+    // compressed input keeps the per-task overhead amortized while
+    // medium inputs still reach full parallelism.
     val width = math.min(par.toLong,
-      math.max(2L, (totalBytes + slice - 1) / slice)).toInt
+      math.max(2L, (totalBytes + SliceBytes - 1) / SliceBytes)).toInt
     // EXPLICIT partition count: a bare `repartition(col)` is an
     // AQE-coalescible exchange, and the pre-explode projection is
     // tiny by construction here (that's why the gate fired) — AQE's

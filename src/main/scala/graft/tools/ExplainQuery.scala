@@ -9,6 +9,11 @@ import graft.{GraftSession, SparkEntry}
   *
   * Usage: runMain graft.tools.ExplainQuery <sfDir> <queryName> [exec]
   *   exec: also run the query and print the FINAL adaptive plan
+  *
+  * The plan is printed through `Plans.stablePlan` (expr ids, RDD ids,
+  * stage ids and measured statistics scrubbed), so two runs of one
+  * query compare with a plain `diff`. Run one query per JVM: a query's
+  * final adaptive plan can depend on what ran earlier in the session.
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
@@ -23,8 +28,8 @@ object ExplainQuery {
       val df = SparkEntry.queries(name)(spark, sfDir)
       if (exec) df.write.format("noop").mode("overwrite").save()
       println("=== plan ===")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(graft.Plans.stablePlan(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     } finally spark.stop()
   }
 }

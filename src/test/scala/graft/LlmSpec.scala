@@ -90,6 +90,17 @@ class LlmSpec extends SparkSpec {
     intercept[graft.exceptions.InvalidArgumentValue] {
       Dedup.minhashNearDups(docs, "doc_id", "text", sigFamily = "simd")
     }
+    // a zero band count must not divide by zero, and a threshold
+    // outside (0, 1] must not turn the 6σ slack into NaN (which would
+    // silently return no pairs)
+    Seq[() => Unit](
+      () => Dedup.minhashNearDups(docs, "doc_id", "text", bands = 0),
+      () => Dedup.minhashNearDups(docs, "doc_id", "text", numHashes = 0),
+      () => Dedup.minhashNearDups(docs, "doc_id", "text", threshold = -0.5),
+      () => Dedup.minhashNearDups(docs, "doc_id", "text",
+        threshold = Double.NaN)
+    ).foreach(bad =>
+      intercept[graft.exceptions.InvalidArgumentValue](bad()))
   }
 
   test("dupClusters labels chains with their min id; dedup keeps one per cluster") {
@@ -224,6 +235,17 @@ class LlmSpec extends SparkSpec {
       Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
         numHashes = 64)
     }
+    Seq[() => Unit](
+      () => Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
+        bands = 0),
+      () => Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
+        numHashes = -128),
+      () => Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
+        threshold = 1.5),
+      () => Dedup.probeMinhashIndex(idx, corpus, batch, "doc_id", "text",
+        threshold = Double.NaN)
+    ).foreach(bad =>
+      intercept[graft.exceptions.InvalidArgumentValue](bad()))
   }
 
   test("probe over-cap shuffled fallback returns identical pairs") {

@@ -218,23 +218,40 @@ class PropertySpec extends SparkSpec {
     // miss probability at J=0.8 is (1−J⁴)^32 ≈ 5e-8 and the 6σ
     // estimate-prefilter miss is ~1e-9 — both far below what ~dozens
     // of random cases could surface, so exact set equality is the
-    // correct assertion (a tolerated miss would mask a logic bug)
-    forAllSeeded(corpusGen, cases = 10) { docsList =>
-      val df = docsList.zipWithIndex
-        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-      val res = Dedup.minhashNearDups(df, "doc_id", "text", threshold = 0.8)
+    // correct assertion (a tolerated miss would mask a logic bug).
+    // The index probe is held to the same brute-force reference: the
+    // first half of each corpus is indexed and probed with the second.
+    def assertEqualsBruteForce(res: org.apache.spark.sql.DataFrame,
+                               expected: Map[(Long, Long), Double],
+                               what: String): Unit = {
       val got = res.collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       res.unpersist()
+      assert(got.keySet == expected.keySet, what)
+      expected.foreach { case (k, v) =>
+        assert(math.abs(got(k) - v) < 1e-9, s"$what: jaccard of $k")
+      }
+    }
+    forAllSeeded(corpusGen, cases = 10) { docsList =>
+      val df = docsList.zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val expected = (for {
         i <- docsList.indices; j <- docsList.indices if i < j
         jac = exactJaccard(docsList(i), docsList(j)) if jac >= 0.8
       } yield ((i.toLong, j.toLong), jac)).toMap
-      assert(got.keySet == expected.keySet,
-        s"minhash pairs differ; corpus=$docsList")
-      expected.foreach { case (k, v) =>
-        assert(math.abs(got(k) - v) < 1e-9)
-      }
+      assertEqualsBruteForce(
+        Dedup.minhashNearDups(df, "doc_id", "text", threshold = 0.8),
+        expected, s"minhash pairs differ; corpus=$docsList")
+
+      val split = docsList.length / 2
+      val indexed = df.filter($"doc_id" < split)
+      val idx = tmpDir("prop-minhash-idx")
+      Dedup.buildMinhashIndex(indexed, "doc_id", "text", idx)
+      assertEqualsBruteForce(
+        Dedup.probeMinhashIndex(idx, indexed,
+          df.filter($"doc_id" >= split), "doc_id", "text", threshold = 0.8),
+        expected.filter { case ((a, b), _) => a < split && b >= split },
+        s"probe pairs differ; split=$split corpus=$docsList")
     }
   }
 
